@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import graft.core.{Merge, SessionLog, TimestampNorm, WriteMode}
+import graft.core.{SessionLog, TimestampNorm, WriteMode}
 import graft.sinks.HostedSinks
 import graft.sources.{GraftCommitMessage, GraftWriteReports}
 
@@ -42,7 +42,7 @@ object HostedTables {
     audited(s"write $itemId mode=${mode.name}")(for {
       _ <- WriteMode.validate(mode, key)
       _ <- if (!HostedSinks.active.exists(itemId)) Left(s"no hosted table '$itemId'") else Right(())
-      _ <- if (df.isEmpty) Left("The DataFrame is empty") else Right(())
+      _ <- nonEmpty(df)
       res <- doWrite(df, itemId, mode, key, chunkSize)
       _ = if (properties.nonEmpty) HostedSinks.active.setProperties(itemId, properties)
     } yield res)
@@ -126,15 +126,11 @@ object HostedTables {
       key: Option[String],
       chunkSize: Int): Either[String, Seq[GraftCommitMessage]] =
     try {
-      // UTC-normalize (src/agol_pandas.py:86-119) and, for merge modes,
-      // dedup source keys deterministically so batch application order
-      // cannot change the result.
-      val normalized = TimestampNorm.toUtc(df)
-      val prepared = key match {
-        case Some(k) if mode.requiresKey => Merge.dedupByKey(normalized, k)
-        case _                           => normalized
-      }
-      val writer = prepared.write.format("graft")
+      // UTC-normalize (src/agol_pandas.py:86-119). Repeated keys need no
+      // pass of their own: a keyed write's one sort fixes the order they
+      // reach the service in, and the service keeps the last for
+      // upsert/update, the first for insert (GraftWrite.requiredOrdering).
+      val writer = TimestampNorm.toUtc(df).write.format("graft")
         .option("itemId", itemId)
         .option("chunkSize", chunkSize)
       val withMode = mode match {
@@ -158,19 +154,26 @@ object HostedTables {
       properties: Map[String, String] = Map.empty): Either[String, String] =
     audited(s"createTable $name")(for {
       norm <- graft.core.ServiceName.normalize(name)
-      _ <- if (df.isEmpty) Left("The DataFrame is empty") else Right(())
-      id <- try {
-        val utc = TimestampNorm.toUtc(df)
-        val id = HostedSinks.active.create(norm, utc.schema, properties)
-        // Reference budget: probe, register, poll until service-visible
-        // (src/agol_pandas.py:293-307); fails the create if the index
-        // never appears, same as the reference's ValueError.
-        val indexed = key.forall(k =>
-          graft.core.IndexPoll.ensureUniqueIndex(HostedSinks.active, id, k))
-        if (indexed) Right(id)
-        else Left("Could not create unique field constraint for appends!")
-      } catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
+      _ <- nonEmpty(df)
+      id <- create(df, norm, key, properties)
     } yield id)
+
+  /** [[createTable]] past its checks, which `save` has already made. */
+  private def create(df: DataFrame, norm: String, key: Option[String],
+                     properties: Map[String, String]): Either[String, String] =
+    try {
+      val id = HostedSinks.active.create(norm, TimestampNorm.toUtc(df).schema, properties)
+      // Reference budget: probe, register, poll until service-visible
+      // (src/agol_pandas.py:293-307); fails the create if the index
+      // never appears, same as the reference's ValueError.
+      val indexed = key.forall(k =>
+        graft.core.IndexPoll.ensureUniqueIndex(HostedSinks.active, id, k))
+      if (indexed) Right(id)
+      else Left("Could not create unique field constraint for appends!")
+    } catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
+
+  private def nonEmpty(df: DataFrame): Either[String, Unit] =
+    if (df.isEmpty) Left("The DataFrame is empty") else Right(())
 
   /** The hosted-type palette a staged CSV is canonicalized to — the analog
     * of the portal's server-side `analyze(file_type='csv')` publish-
@@ -234,7 +237,7 @@ object HostedTables {
       properties: Map[String, String] = Map.empty,
       tableId: Option[String] = None): Either[String, (String, Seq[GraftCommitMessage])] =
     audited(s"save $name")(for {
-      _ <- if (df.isEmpty) Left("The DataFrame is empty") else Right(())
+      _ <- nonEmpty(df)
       id <- tableId match {
         case Some(tid) =>
           if (HostedSinks.active.exists(tid)) Right(tid)
@@ -244,7 +247,8 @@ object HostedTables {
             norm <- graft.core.ServiceName.normalize(name)
             resolved <- HostedSinks.active.resolveByTitle(norm) match {
               case Some(existing) => Right(existing)
-              case None           => createTable(df, norm, key, properties)
+              case None =>
+                audited(s"createTable $norm")(create(df, norm, key, properties))
             }
           } yield resolved
       }

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,38 +28,44 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
 
-  /** One row per key, deterministic winner (greatest row by the remaining
-    * columns' struct order). The reference requires unique keys via the
-    * remote index (`src/agol_pandas.py:253-312`); when the *source* batch
-    * itself carries duplicate keys, the service's upsert applies them in
-    * arrival order — non-reproducible. We pin a deterministic winner
-    * instead so results are stable across partitionings and retries.
+  /** One row per key, the greatest by the remaining orderable columns.
+    * The reference requires unique keys via the remote index
+    * (`src/agol_pandas.py:253-312`); a source batch that repeats a key is
+    * collapsed by the service in arrival order, and a keyed write sorts
+    * its rows first, so the greatest row wins an upsert or update.
     */
-  def dedupByKey(df: DataFrame, key: String): DataFrame = {
-    val others = df.columns.filterNot(_ == key).map(col).toIndexedSeq
-    if (others.isEmpty) df.distinct()
+  def dedupByKey(df: DataFrame, key: String): DataFrame = winners(df, key, greatest = true)
+
+  /** One row per key: the greatest (or least) by the struct of the other
+    * orderable columns, matching the write's sort (nulls order first).
+    */
+  private def winners(df: DataFrame, key: String, greatest: Boolean): DataFrame = {
+    val others = df.schema.fields.filter(f =>
+      f.name != key && RowOrdering.isOrderable(f.dataType)).map(f => col(f.name)).toIndexedSeq
+    if (others.isEmpty) df.dropDuplicates(key)
     else {
-      val w = Window.partitionBy(col(key)).orderBy(struct(others: _*).desc)
-      df.withColumn("__rn", row_number().over(w))
+      val byRow = if (greatest) struct(others: _*).desc else struct(others: _*).asc
+      df.withColumn("__rn", row_number().over(Window.partitionBy(col(key)).orderBy(byRow)))
         .filter(col("__rn") === 1)
         .drop("__rn")
     }
   }
 
   def upsert(target: DataFrame, source: DataFrame, key: String): DataFrame = {
-    val s = dedupByKey(source, key)
+    val s = winners(source, key, greatest = true)
     s.unionByName(target.join(s.select(key), Seq(key), "left_anti"))
   }
 
   def update(target: DataFrame, source: DataFrame, key: String): DataFrame = {
-    val s = dedupByKey(source, key)
+    val s = winners(source, key, greatest = true)
     s.join(target.select(key), Seq(key), "left_semi")
       .unionByName(target.join(s.select(key), Seq(key), "left_anti"))
   }
 
+  /** The service keeps the first arrival of a repeated key, the least row. */
   def insert(target: DataFrame, source: DataFrame, key: String): DataFrame =
     target.unionByName(
-      dedupByKey(source, key).join(target.select(key), Seq(key), "left_anti"))
+      winners(source, key, greatest = false).join(target.select(key), Seq(key), "left_anti"))
 
   def append(target: DataFrame, source: DataFrame): DataFrame =
     target.unionByName(source)

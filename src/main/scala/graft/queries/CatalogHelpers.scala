@@ -215,14 +215,16 @@ private[graft] object CatalogHelpers {
   def writeScenario(s: SparkSession, dir: String, mode: WriteMode,
                             title: String): DataFrame = {
     val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
-    val id = hostedCopy(s, dir, "orders", title, Some("o_orderkey"), cols)
+    // only merge modes index the key: an append of repeated keys into a
+    // unique-indexed table is refused, as a real service refuses it
+    val key = if (mode.requiresKey) Some("o_orderkey") else None
+    val id = hostedCopy(s, dir, "orders", title, key, cols)
     val orders = t(s, dir, "orders").select(cols.map(col): _*)
     val updates = orders.filter(col("o_orderkey") % 3 === 0)
       .withColumn("o_totalprice", col("o_totalprice") + lit(1.0))
     val inserts = orders.filter(col("o_orderkey") % 5 === 0)
       .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
     val src = updates.unionByName(inserts)
-    val key = if (mode.requiresKey) Some("o_orderkey") else None
     HostedTables.write(src, id, mode, key).fold(sys.error, identity)
     HostedTables.read(s, id).orderBy("o_orderkey", "o_totalprice")
   }

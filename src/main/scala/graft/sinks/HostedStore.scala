@@ -84,16 +84,16 @@ object HostedStore {
         * until later misses happen to evict it.
         */
       version: Long = 0L,
-      /** Maintained key→row-position index for the ACTIVE merge key
+      /** Maintained value→row-position index per unique field
         * (lowercased field → value → index into `rows`). This is the
         * service-contract cost model: a real hosted upsert goes through
         * the unique index at O(batch·log n), so the double must not
         * charge O(table) per partition commit (32 writer partitions ×
         * full-table rebuild priced a 10× corpus at ~25× — measured on
-        * `ref_write_upsert` at sf1). Built lazily on first merge use,
-        * maintained incrementally by merge applies, and INVALIDATED by
-        * append/delete/truncate (and by a merge on a different key —
-        * replaced rows may change the other key's values).
+        * `ref_write_upsert` at sf1). Built when the index is added or
+        * lazily on first use, maintained by appends (for every unique
+        * field) and merges (for the merge key only — replaced rows may
+        * change other fields' values), INVALIDATED by delete/truncate.
         */
       keyPos: Map[String, Map[Any, Int]] = Map.empty)
 
@@ -290,6 +290,9 @@ object HostedStore {
       t.indexes.find(ix => ix.isUnique && ix.field == fl) match {
         case Some(ix) => (t, ix.name)
         case None =>
+          // a real service fails to build a unique index over repeats
+          val pos = positions(t, fl)(throw new IllegalArgumentException(
+            s"cannot add a unique index on '$field': its values repeat on '$itemId'"))
           // Reference naming: UX_{item.title.upper()}_{table_name.upper()}_
           // {field}_ASC (`src/agol_pandas.py:293`); the fake's service-layer
           // table name is the item id.
@@ -299,7 +302,8 @@ object HostedStore {
           if (!visible) pendingPolls.put((itemId, fl), indexCreationPollDelay)
           (t.copy(
             indexes = t.indexes :+ ix,
-            uniqueIndexes = if (visible) t.uniqueIndexes + fl else t.uniqueIndexes),
+            uniqueIndexes = if (visible) t.uniqueIndexes + fl else t.uniqueIndexes,
+            keyPos = t.keyPos + (fl -> pos)),
             name)
       }
     }
@@ -539,9 +543,19 @@ object HostedStore {
     if (batchId.exists(t.appliedBatches.contains)) return (t, 0L)
     val (t1, affected): (TableState, Long) = mode match {
       case WriteMode.Append | WriteMode.Overwrite =>
-        // Overwrite's truncate already happened once, driver-side.
-        (t.copy(rows = t.rows ++ batch, keyPos = Map.empty),
-          batch.size.toLong)
+        // Overwrite's truncate already happened once, driver-side. Every
+        // unique index (visible or still building) holds on appends too: a
+        // batch that would repeat one of its values is refused whole.
+        val pos = t.indexes.collect { case ix if ix.isUnique => ix.field }.map { fl =>
+          val fi = fieldIndexOf(t, fl)
+          fl -> batch.zipWithIndex.foldLeft(positions(t, fl)(brokenIndex(t, fl))) {
+            case (m, (r, i)) =>
+              require(!m.contains(r.get(fi)), s"append would repeat value " +
+                s"'${r.get(fi)}' of unique field '$fl' on '${t.itemId}'")
+              m.updated(r.get(fi), t.rows.size + i)
+          }
+        }.toMap
+        (t.copy(rows = t.rows ++ batch, keyPos = pos), batch.size.toLong)
       case WriteMode.Upsert | WriteMode.Update | WriteMode.Insert =>
         val k = key.getOrElse(
           throw new IllegalArgumentException(s"mode ${mode.name} requires a key"))
@@ -557,78 +571,61 @@ object HostedStore {
         val collapsed = scala.collection.mutable.LinkedHashMap.empty[Any, Row]
         batch.foreach { r =>
           val kv = r.get(ki)
-          if (mode == WriteMode.Insert) {
-            if (!collapsed.contains(kv)) collapsed.put(kv, r)
-          } else collapsed.put(kv, r)
+          if (mode != WriteMode.Insert || !collapsed.contains(kv)) collapsed.put(kv, r)
         }
         // Apply through the key→position index (see TableState.keyPos):
-        // O(batch) per commit, not O(table). Build lazily if append/
-        // delete/truncate (or a different merge key) invalidated it; a
-        // table that somehow carries DUPLICATE key values (possible via
-        // unchecked appends after the index was registered) falls back to
-        // the legacy full-scan apply, which replaces every occurrence —
-        // byte-identical behavior in that broken-contract corner.
+        // O(batch) per commit, not O(table).
         val kl = k.toLowerCase
-        val builtPos: Option[Map[Any, Int]] = t.keyPos.get(kl).orElse {
-          val b = Map.newBuilder[Any, Int]
-          var i = 0
-          t.rows.foreach { r => b += (r.get(ki) -> i); i += 1 }
-          val m = b.result()
-          if (m.size == t.rows.size) Some(m) else None
-        }
-        builtPos match {
-          case Some(pos0) =>
-            var rowsV = t.rows
-            var pos = pos0
-            var matched = 0L
-            var inserted = 0L
-            collapsed.foreach { case (kv, nr) =>
-              pos.get(kv) match {
-                case Some(i) =>
-                  matched += 1
-                  if (mode != WriteMode.Insert) rowsV = rowsV.updated(i, nr)
-                case None =>
-                  if (mode != WriteMode.Update) {
-                    pos = pos.updated(kv, rowsV.size)
-                    rowsV = rowsV :+ nr
-                    inserted += 1
-                  }
+        var rowsV = t.rows
+        var pos = positions(t, kl)(brokenIndex(t, kl))
+        var matched = 0L
+        var inserted = 0L
+        collapsed.foreach { case (kv, nr) =>
+          pos.get(kv) match {
+            case Some(i) =>
+              matched += 1
+              if (mode != WriteMode.Insert) rowsV = rowsV.updated(i, nr)
+            case None =>
+              if (mode != WriteMode.Update) {
+                pos = pos.updated(kv, rowsV.size)
+                rowsV = rowsV :+ nr
+                inserted += 1
               }
-            }
-            val affected = mode match {
-              case WriteMode.Update => matched
-              case WriteMode.Insert => inserted
-              case _                => collapsed.size.toLong
-            }
-            // Replaced rows may change OTHER indexed columns' values, so
-            // only the active key's map survives this apply.
-            (t.copy(rows = rowsV, keyPos = Map(kl -> pos)), affected)
-          case None =>
-            val existingKeys = t.rows.iterator.map(_.get(ki)).toSet
-            val updated = t.rows.map { r =>
-              collapsed.get(r.get(ki)) match {
-                case Some(nr) if mode != WriteMode.Insert => nr
-                case _                                    => r
-              }
-            }
-            val inserts =
-              if (mode == WriteMode.Update) Vector.empty
-              else collapsed.valuesIterator
-                .filterNot(r => existingKeys.contains(r.get(ki))).toVector
-            val affected = (mode match {
-              case WriteMode.Update =>
-                collapsed.keysIterator.count(existingKeys.contains)
-              case WriteMode.Insert => inserts.size
-              case _                => collapsed.size
-            }).toLong
-            (t.copy(rows = updated ++ inserts, keyPos = Map.empty), affected)
+          }
         }
+        val affected = mode match {
+          case WriteMode.Update => matched
+          case WriteMode.Insert => inserted
+          case _                => collapsed.size.toLong
+        }
+        // Replaced rows may change OTHER indexed columns' values, so
+        // only the active key's map survives this apply.
+        (t.copy(rows = rowsV, keyPos = Map(kl -> pos)), affected)
     }
     // Only a *successfully applied* batch is recorded — a failed apply
     // (contract violation above) must stay replayable.
     (batchId.fold(t1)(id => t1.copy(appliedBatches = t1.appliedBatches + id)),
       affected)
   }
+
+  private def fieldIndexOf(t: TableState, fl: String): Int =
+    t.schema.fieldNames.indexWhere(_.toLowerCase == fl)
+
+  /** The value→position map of field `fl` (lowercased): the maintained
+    * one, or built from the rows, calling `repeated` if their values repeat.
+    */
+  private def positions(t: TableState, fl: String)(repeated: => Nothing): Map[Any, Int] =
+    t.keyPos.getOrElse(fl, {
+      val fi = fieldIndexOf(t, fl)
+      val m = t.rows.iterator.map(_.get(fi)).zipWithIndex.toMap
+      if (m.size == t.rows.size) m else repeated
+    })
+
+  // Index creation, appends and merges all refuse repeats, so a unique
+  // field that repeats a value means the store itself is wrong.
+  private def brokenIndex(t: TableState, fl: String): Nothing =
+    throw new IllegalStateException(
+      s"'${t.itemId}' repeats a value of its unique field '$fl'")
 
   // ---------------------------------------------- staged (transactional)
   // Per-attempt shadow buffers: the service-side analog of staging into a

@@ -24,6 +24,9 @@ import graft.core.WriteMode
   */
 final class LocalPortalServer(token: String, port: Int = 0) {
 
+  // Without TCP_NODELAY each kept-alive exchange stalls ~44 ms (Nagle vs
+  // delayed ACK); the JDK reads this once, at its first server's creation.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // Daemon threads AND an explicit shutdown: a lingering non-daemon pool
   // would keep the JVM alive after main exits even once the server socket
@@ -65,9 +68,13 @@ final class LocalPortalServer(token: String, port: Int = 0) {
       ex.getResponseBody.write(bytes)
     } catch {
       case e: Throwable =>
+        // A contract violation (no unique index, a repeated unique value,
+        // an unknown field) never heals: 400, which the client does not
+        // retry. Anything else is a 500.
+        val code = if (e.isInstanceOf[IllegalArgumentException]) 400 else 500
         val bytes = PortalJson.write(err(String.valueOf(e.getMessage)))
           .getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(500, bytes.length.toLong)
+        ex.sendResponseHeaders(code, bytes.length.toLong)
         ex.getResponseBody.write(bytes)
     } finally ex.close()
   }
@@ -178,14 +185,8 @@ final class LocalPortalServer(token: String, port: Int = 0) {
           val key = Option(b.get("key")).map(_.asText())
           val batchId = Option(b.get("batchId")).map(_.asText())
           val rows = b.get("rows").elements().asScala.map(PortalJson.decodeRow).toSeq
-          try {
-            val affected = HostedStore.appendBatch(id, rows, mode, key, batchId)
-            val n = PortalJson.obj(); n.put("affected", affected); 200 -> n
-          } catch {
-            // contract violations (no unique index, missing key) are 400s:
-            // the client must NOT retry them
-            case e: IllegalArgumentException => 400 -> err(e.getMessage)
-          }
+          val affected = HostedStore.appendBatch(id, rows, mode, key, batchId)
+          val n = PortalJson.obj(); n.put("affected", affected); 200 -> n
         })
 
       case ("POST", "items" :: id :: "deleteByKey" :: Nil) =>
@@ -194,14 +195,9 @@ final class LocalPortalServer(token: String, port: Int = 0) {
           val keys = b.get("keys").elements().asScala
             .map(PortalJson.decodeValue).toSeq
           val batchId = Option(b.get("batchId")).map(_.asText())
-          try {
-            val affected = HostedStore.deleteByKey(id,
-              b.get("keyField").asText(), keys, batchId)
-            val n = PortalJson.obj(); n.put("affected", affected); 200 -> n
-          } catch {
-            // missing unique index is a contract violation, not retryable
-            case e: IllegalArgumentException => 400 -> err(e.getMessage)
-          }
+          val affected = HostedStore.deleteByKey(id,
+            b.get("keyField").asText(), keys, batchId)
+          val n = PortalJson.obj(); n.put("affected", affected); 200 -> n
         })
 
       case ("POST", "items" :: id :: "stage" :: Nil) =>
@@ -219,13 +215,9 @@ final class LocalPortalServer(token: String, port: Int = 0) {
           val mode = WriteMode.parse(b.get("mode").asText())
             .fold(e => throw new IllegalArgumentException(e), identity)
           val key = Option(b.get("key")).map(_.asText())
-          try {
-            val affected = HostedStore.commitStaged(id, b.get("partKey").asText(),
-              b.get("attemptId").asLong(), mode, key)
-            val n = PortalJson.obj(); n.put("affected", affected); 200 -> n
-          } catch {
-            case e: IllegalArgumentException => 400 -> err(e.getMessage)
-          }
+          val affected = HostedStore.commitStaged(id, b.get("partKey").asText(),
+            b.get("attemptId").asLong(), mode, key)
+          val n = PortalJson.obj(); n.put("affected", affected); 200 -> n
         })
 
       case ("POST", "items" :: id :: "discardStaged" :: Nil) => withItem(id) { _ =>

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
@@ -40,10 +41,10 @@ import graft.sinks.{FilterEval, HostedSinks, ServiceRef, SinkResolver}
   * `src/agol_pandas.py:315-316`), returning a `WriterCommitMessage` with the
   * audit fields of the reference's chunk dicts (`:459-461`). Truncate-for-
   * overwrite happens exactly once, driver-side (`SupportsTruncate`,
-  * mirroring the server-side truncate at `:395-396`). When a merge key is
-  * set, the write declares `RequiresDistributionAndOrdering` so Catalyst
-  * plans the range-shuffle + sort that replaces the reference's
-  * driver-side sort-then-slice (`:193-208`).
+  * mirroring the server-side truncate at `:395-396`). When a key is set,
+  * the write declares `RequiresDistributionAndOrdering`: one range shuffle
+  * and one sort replace the reference's sort-then-slice (`:193-208`), and
+  * fix the order repeated keys reach the service in (see [[GraftWrite]]).
   *
   * Options: `itemId` (read/write existing), `pageSize` (read, default
   * 10000), `writeMode` (append|upsert|update|insert), `key`, `chunkSize`,
@@ -446,18 +447,29 @@ class GraftWrite(itemId: String, schema: StructType, mode: WriteMode,
                  queryId: String, svc: Option[ServiceRef] = None)
     extends Write with RequiresDistributionAndOrdering {
 
-  // With a merge key, ask Catalyst for a range distribution ordered by the
-  // key: each writer then covers a disjoint, sorted key range — the
-  // distributed equivalent of the reference's sort-before-chunk
-  // (src/agol_pandas.py:193-208) with no driver involvement.
+  // With a key, ask Catalyst for a range distribution on the key: each
+  // writer covers a disjoint key range — the distributed equivalent of the
+  // reference's sort-before-chunk (src/agol_pandas.py:193-208). Rows are
+  // sorted by the key, then every other orderable column (not maps), so a
+  // repeated key's rows reach the service in an order fixed by the rows:
+  // it keeps the last (greatest) for upsert/update, the first for insert.
   override def requiredDistribution(): Distribution = key match {
     case Some(k) => Distributions.ordered(Array(orderBy(k)))
     case None    => Distributions.unspecified()
   }
-  override def requiredOrdering(): Array[SortOrder] =
-    key.map(k => Array(orderBy(k))).getOrElse(Array.empty)
-  private def orderBy(k: String): SortOrder =
-    Expressions.sort(Expressions.identity(k), SortDirection.ASCENDING)
+  override def requiredOrdering(): Array[SortOrder] = key.toArray.flatMap(k =>
+    (k +: schema.fields.collect {
+      case f if f.name != k && RowOrdering.isOrderable(f.dataType) => f.name
+    }).map(orderBy))
+  // backtick-quoted: a column named "a.b" is one column, not a struct path
+  private def orderBy(c: String): SortOrder =
+    Expressions.sort(Expressions.column("`" + c.replace("`", "``") + "`"),
+      SortDirection.ASCENDING)
+
+  private def ensureIndex(): Unit = key.foreach { k =>
+    if (!graft.core.IndexPoll.ensureUniqueIndex(SinkResolver.resolve(svc), itemId, k))
+      throw new IllegalStateException(s"unique index on '$k' never became visible on '$itemId'")
+  }
 
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory = {
@@ -466,11 +478,7 @@ class GraftWrite(itemId: String, schema: StructType, mode: WriteMode,
       // (src/agol_pandas.py:410-412).
       if (truncateFirst || mode == WriteMode.Overwrite)
         SinkResolver.resolve(svc).truncate(itemId)
-      key.foreach { k =>
-        if (!graft.core.IndexPoll.ensureUniqueIndex(SinkResolver.resolve(svc), itemId, k))
-          throw new IllegalStateException(
-            s"unique index on '$k' never became visible on '$itemId'")
-      }
+      ensureIndex()
       // One write id per job, minted driver-side: batch ids derived from
       // it are stable across task retries, so replayed flushes dedup
       // service-side (exactly-once on at-least-once attempts).
@@ -496,11 +504,7 @@ class GraftWrite(itemId: String, schema: StructType, mode: WriteMode,
   override def toStreaming: wstream.StreamingWrite = new wstream.StreamingWrite {
     override def createStreamingWriterFactory(
         i: PhysicalWriteInfo): wstream.StreamingDataWriterFactory = {
-      key.foreach { k =>
-        if (!graft.core.IndexPoll.ensureUniqueIndex(SinkResolver.resolve(svc), itemId, k))
-          throw new IllegalStateException(
-            s"unique index on '$k' never became visible on '$itemId'")
-      }
+      ensureIndex()
       GraftStreamingWriterFactory(itemId, schema, mode, key, chunkSize, queryId,
         svc)
     }
@@ -576,25 +580,19 @@ class GraftDataWriter(itemId: String, schema: StructType, mode: WriteMode,
   private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
   private var rows = 0L
   private var batches = 0
+  // Audit key range: a keyed write's rows arrive sorted by key (see
+  // GraftWrite.requiredOrdering), so the first and the last non-null key
+  // seen are the partition's least and greatest.
   private var minKeyVal: Any = null
   private var maxKeyVal: Any = null
-
-  // Native-type key comparison for the audit range: lexicographic compare
-  // of stringified numbers would report "99" > "100". Shares the service's
-  // value ordering; unsupported types fall back to string compare.
-  private def cmpKeys(a: Any, b: Any): Int =
-    try graft.sinks.FilterEval.cmpValues(a, b)
-    catch { case _: IllegalArgumentException =>
-      String.valueOf(a).compareTo(String.valueOf(b))
-    }
 
   override def write(record: InternalRow): Unit = {
     val r = toScala(record.copy()).asInstanceOf[Row]
     keyIdx.foreach { i =>
       val k = r.get(i)
       if (k != null) {
-        if (minKeyVal == null || cmpKeys(k, minKeyVal) < 0) minKeyVal = k
-        if (maxKeyVal == null || cmpKeys(k, maxKeyVal) > 0) maxKeyVal = k
+        if (minKeyVal == null) minKeyVal = k
+        maxKeyVal = k
       }
     }
     buf += r

@@ -36,12 +36,12 @@ object ProfileWrite {
     val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
     val orders = Tables.load(spark, sfDir, "orders").select(cols.map(col): _*)
     println(s"[profwrite] orders=${orders.count()} mode=${mode.name}")
+    val key = if (mode.requiresKey) Some("o_orderkey") else None // as ref_write_*
     (1 to 2).foreach { round =>
       println(s"[profwrite] --- round $round ---")
       HostedStore.dropByTitle("q_profile_write")
       val id = time("createTable") {
-        HostedTables.createTable(orders, "q_profile_write",
-          Some("o_orderkey")).fold(sys.error, identity)
+        HostedTables.createTable(orders, "q_profile_write", key).fold(sys.error, identity)
       }
       time("bulk append (hostedCopy body)") {
         HostedTables.write(orders, id, WriteMode.Append).fold(sys.error, identity)
@@ -52,8 +52,7 @@ object ProfileWrite {
         .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
       val src = updates.unionByName(inserts)
       time(s"merge write (${mode.name})") {
-        HostedTables.write(src, id, mode, Some("o_orderkey"))
-          .fold(sys.error, identity)
+        HostedTables.write(src, id, mode, key).fold(sys.error, identity)
       }
       time("read-back count") {
         HostedTables.read(spark, id).count()

@@ -113,6 +113,15 @@ class RestSinkSpec extends AnyFunSuite {
       assertThrows[IllegalArgumentException] {
         client.appendBatch(noIdx, rows, WriteMode.Upsert, Some("o_orderkey"))
       }
+      // so are an append that repeats a unique key and a unique index
+      // over repeated values
+      assertThrows[IllegalArgumentException] {
+        client.appendBatch(id, rows, WriteMode.Append, None)
+      }
+      client.appendBatch(noIdx, rows ++ rows, WriteMode.Append, None)
+      assertThrows[IllegalArgumentException] {
+        client.addUniqueIndex(noIdx, "o_orderkey")
+      }
       // bad token is rejected
       val badClient = new RestHostedService(server.url, "wrong-token",
         RetryPolicy(maxAttempts = 2, maxBackoffSec = 0.01, seed = Some(1)))
