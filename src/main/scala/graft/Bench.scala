@@ -126,7 +126,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tier = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIER", "headline")
     // min-of-N reps (default 3): one rep is dominated by first-use
     // codegen, two leave no slack when a background flush lands mid-rep —
@@ -136,14 +135,7 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps " +
       "(0 reps = zero samples per query and an empty-min crash mid-run)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     // Count codegen compile failures (janino 64 KB blowups etc.): Spark
     // falls back to interpreted execution WITHOUT failing the query, so a
     // codegen regression would otherwise only show up as silent slowdown

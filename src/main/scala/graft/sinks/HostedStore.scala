@@ -91,9 +91,8 @@ object HostedStore {
         * charge O(table) per partition commit (32 writer partitions ×
         * full-table rebuild priced a 10× corpus at ~25× — measured on
         * `ref_write_upsert` at sf1). Built when the index is added or
-        * lazily on first use, maintained by appends (for every unique
-        * field) and merges (for the merge key only — replaced rows may
-        * change other fields' values), INVALIDATED by delete/truncate.
+        * lazily on first use, maintained for every unique field by each
+        * apply (see `Placement`), INVALIDATED by delete/truncate.
         */
       keyPos: Map[String, Map[Any, Int]] = Map.empty)
 
@@ -541,21 +540,12 @@ object HostedStore {
     // applied is a task-retry replay — skip it (exactly-once writes on
     // top of at-least-once task attempts).
     if (batchId.exists(t.appliedBatches.contains)) return (t, 0L)
-    val (t1, affected): (TableState, Long) = mode match {
+    val (placed, affected) = mode match {
       case WriteMode.Append | WriteMode.Overwrite =>
-        // Overwrite's truncate already happened once, driver-side. Every
-        // unique index (visible or still building) holds on appends too: a
-        // batch that would repeat one of its values is refused whole.
-        val pos = t.indexes.collect { case ix if ix.isUnique => ix.field }.map { fl =>
-          val fi = fieldIndexOf(t, fl)
-          fl -> batch.zipWithIndex.foldLeft(positions(t, fl)(brokenIndex(t, fl))) {
-            case (m, (r, i)) =>
-              require(!m.contains(r.get(fi)), s"append would repeat value " +
-                s"'${r.get(fi)}' of unique field '$fl' on '${t.itemId}'")
-              m.updated(r.get(fi), t.rows.size + i)
-          }
-        }.toMap
-        (t.copy(rows = t.rows ++ batch, keyPos = pos), batch.size.toLong)
+        // Overwrite's truncate already happened once, driver-side.
+        val placed = new Placement(t, None)
+        placed.append(batch)
+        (placed, batch.size.toLong)
       case WriteMode.Upsert | WriteMode.Update | WriteMode.Insert =>
         val k = key.getOrElse(
           throw new IllegalArgumentException(s"mode ${mode.name} requires a key"))
@@ -575,37 +565,85 @@ object HostedStore {
         }
         // Apply through the key→position index (see TableState.keyPos):
         // O(batch) per commit, not O(table).
-        val kl = k.toLowerCase
-        var rowsV = t.rows
-        var pos = positions(t, kl)(brokenIndex(t, kl))
+        val placed = new Placement(t, Some(k.toLowerCase))
         var matched = 0L
         var inserted = 0L
         collapsed.foreach { case (kv, nr) =>
-          pos.get(kv) match {
+          placed.positionOf(kv) match {
             case Some(i) =>
               matched += 1
-              if (mode != WriteMode.Insert) rowsV = rowsV.updated(i, nr)
+              if (mode != WriteMode.Insert) placed.place(nr, i)
             case None =>
               if (mode != WriteMode.Update) {
-                pos = pos.updated(kv, rowsV.size)
-                rowsV = rowsV :+ nr
+                placed.place(nr, -1)
                 inserted += 1
               }
           }
         }
-        val affected = mode match {
+        (placed, mode match {
           case WriteMode.Update => matched
           case WriteMode.Insert => inserted
           case _                => collapsed.size.toLong
-        }
-        // Replaced rows may change OTHER indexed columns' values, so
-        // only the active key's map survives this apply.
-        (t.copy(rows = rowsV, keyPos = Map(kl -> pos)), affected)
+        })
     }
+    val t1 = t.copy(rows = placed.rows, keyPos = placed.keyPos)
     // Only a *successfully applied* batch is recorded — a failed apply
     // (contract violation above) must stay replayable.
     (batchId.fold(t1)(id => t1.copy(appliedBatches = t1.appliedBatches + id)),
       affected)
+  }
+
+  /** The rows of one apply in progress, with the value→position map of
+    * every unique index on the table, visible or still building. A row
+    * that would repeat a value another row holds in any unique field is
+    * refused, and the apply with it. `key` is a merge's key (lowercased):
+    * rows are found by its value, so a replaced row keeps that value and a
+    * new row's is known to be absent, and neither is checked again.
+    */
+  private final class Placement(t: TableState, key: Option[String]) {
+    private val fields = t.indexes.collect { case ix if ix.isUnique => ix.field }.distinct.toArray
+    private val fis = fields.map(fieldIndexOf(t, _))
+    private val pos = fields.map(fl => positions(t, fl)(brokenIndex(t, fl)))
+    private val ks = key.fold(-1)(fields.indexOf(_))
+    var rows: Vector[Row] = t.rows
+
+    /** The position of the row whose merge key is `v`. */
+    def positionOf(v: Any): Option[Int] = pos(ks).get(v)
+
+    def append(batch: Seq[Row]): Unit = {
+      if (fis.nonEmpty) batch.iterator.zipWithIndex.foreach { case (r, n) =>
+        index(r, -1, rows.size + n)
+      }
+      rows = rows ++ batch
+    }
+
+    /** Puts `nr` in place of row `i`, or after the last row when `i` < 0. */
+    def place(nr: Row, i: Int): Unit = {
+      index(nr, i, if (i < 0) rows.size else i)
+      rows = if (i < 0) rows :+ nr else rows.updated(i, nr)
+    }
+
+    // A replaced row's old value leaves each map before the new value is
+    // checked, so a row may keep its own values.
+    private def index(nr: Row, i: Int, at: Int): Unit = {
+      var j = 0
+      while (j < fis.length) {
+        if (j == ks) {
+          if (i < 0) pos(j) = pos(j).updated(nr.get(fis(j)), at)
+        } else {
+          val nv = nr.get(fis(j))
+          if (i < 0 || rows(i).get(fis(j)) != nv) {
+            val m = if (i < 0) pos(j) else pos(j) - rows(i).get(fis(j))
+            require(!m.contains(nv), s"write would repeat value " +
+              s"'$nv' of unique field '${fields(j)}' on '${t.itemId}'")
+            pos(j) = m.updated(nv, at)
+          }
+        }
+        j += 1
+      }
+    }
+
+    def keyPos: Map[String, Map[Any, Int]] = fields.zip(pos).toMap
   }
 
   private def fieldIndexOf(t: TableState, fl: String): Int =

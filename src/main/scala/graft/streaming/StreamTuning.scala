@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   * pays per-partition state-store open/commit regardless of how little
   * state lives there: the hourly-upsert stream holds ≤ 720 state rows,
   * and at 32 static partitions the store bookkeeping measured 4.3 s vs
-  * 2.2 s at 8 (ProfileStreamHourly) — pure fixed cost, identical rows.
+  * 2.2 s at 8 (an A/B of `q_stream_hourly`'s state-partition count;
+  * `graft.tools.Attribute` splits such a run per stage) — pure fixed
+  * cost, identical rows.
   *
   * So: derive the stream's partition count from its INPUT SIZE (the
   * replayed file set), one partition per `bytesPerPartition` (default
@@ -71,23 +73,21 @@ object StreamTuning {
     try body finally spark.conf.set(key, old)
   }
 
-  /** A/B escape hatch for the profiling drills (ProfileStreamHourly,
-    * ProfileStreamFamily): with `spark.graft.stream.derivePartitions =
-    * false`, [[withDerivedPartitions]] runs `body` unchanged, so a drill
-    * varying the session conf actually measures different state-shard
-    * counts instead of every arm clamping to the derived value (r16
-    * ADVICE: the hourly profiler's arms were all measuring the same
-    * configuration).
+  private val derivedBypassed = new scala.util.DynamicVariable(false)
+
+  /** Runs `body` with [[withDerivedPartitions]] leaving the session's
+    * static count in place, so a check can compare both counts' results
+    * (`graft.tools.StreamInvarianceCheck`). Scoped to the calling thread.
     */
-  private def deriveEnabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.stream.derivePartitions", "true").toBoolean
+  private[graft] def withoutDerivedPartitions[A](body: => A): A =
+    derivedBypassed.withValue(true)(body)
 
   /** The composed convenience: scope the session's shuffle partitions to
     * the input-derived count for one replayed file set.
     */
   def withDerivedPartitions[A](spark: SparkSession, dir: String,
                                glob: String)(body: => A): A =
-    if (!deriveEnabled(spark)) body
+    if (derivedBypassed.value) body
     else withShufflePartitions(spark,
       derivedPartitions(spark, inputBytes(spark, dir, glob)))(body)
 }

@@ -504,18 +504,11 @@ object BenchSf1 {
       org.apache.spark.sql.types.StringType)))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.LocalSession.cpus
     val smallHeap = args.contains("smallheap")
     val sf10Mode = args.contains("sf10")
     val sf100Mode = args.contains("sf100")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
     CodegenErrors.install()
     if (smallHeap) {
       val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
@@ -528,7 +521,7 @@ object BenchSf1 {
     }
     buildSf1(spark)
     if (args.contains("buildonly")) {
-      // fixture-(re)generation mode for targeted drills (TimeQuery,
+      // fixture-(re)generation mode for targeted drills (Attribute,
       // ad-hoc headline runs at sf1) without paying for the probe sweep
       println(s"[bench-sf1] built $sf1Dir (buildonly)")
       spark.stop(); return

@@ -1,10 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Progress reporting — the working replacement for the reference's dead
@@ -12,33 +7,24 @@ import org.apache.spark.sql.SparkSession
   * references an undefined module and can never run).
   *
   * In a distributed engine, progress is an event-stream concern, not a
-  * driver-side loop over rows: this listener records per-stage record/byte
-  * counts off the scheduler bus (zero overhead on the hot path) and renders
-  * the reference's "Loaded X of Y" lines from them. Attach per-session;
-  * metrics are also visible in the Spark UI when enabled.
+  * driver-side loop over rows: this is a [[QueryProfile]] that renders the
+  * reference's "Loaded X of Y" lines from each completed stage's record
+  * (zero overhead on the hot path). Attach per-session; metrics are also
+  * visible in the Spark UI when enabled.
   */
 final class ProgressListener(log: String => Unit = s => Console.err.println(s))
-    extends SparkListener {
+    extends QueryProfile {
 
   final case class StageProgress(stageId: Int, name: String, tasks: Int,
                                  recordsRead: Long, bytesRead: Long,
                                  recordsWritten: Long)
 
-  private val completed = new ConcurrentLinkedQueue[StageProgress]()
+  override protected def stageCompleted(s: QueryProfile.Stage): Unit =
+    log(f"[progress] stage ${s.id}%4d ${s.tasks}%4d tasks " +
+      f"in=${s.inputRecords}%,d rows out=${s.outputRecords}%,d rows")
 
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-    val info = sc.stageInfo
-    val m = info.taskMetrics
-    val p = StageProgress(info.stageId, info.name.takeWhile(_ != '\n'),
-      info.numTasks,
-      m.inputMetrics.recordsRead, m.inputMetrics.bytesRead,
-      m.outputMetrics.recordsWritten)
-    completed.add(p)
-    log(f"[progress] stage ${p.stageId}%4d ${p.tasks}%4d tasks " +
-      f"in=${p.recordsRead}%,d rows out=${p.recordsWritten}%,d rows")
-  }
-
-  def stages: Seq[StageProgress] = completed.asScala.toSeq
+  def stages: Seq[StageProgress] = stageRecords.map(s =>
+    StageProgress(s.id, s.callSite, s.tasks, s.inputRecords, s.inputBytes, s.outputRecords))
 
   def totalRecordsRead: Long = stages.map(_.recordsRead).sum
 }

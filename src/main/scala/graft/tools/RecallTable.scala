@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall@10-vs-nprobe at sf1 (the synthesized 10× corpus), TRAINED
@@ -20,15 +19,7 @@ object RecallTable {
     val sf1Dir = "/tmp/graft_sf1"
     require(new java.io.File(s"$sf1Dir/embeddings.parquet").exists(),
       s"sf1 corpus missing at $sf1Dir — run graft.tools.BenchSf1 first")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
 
     val emb = spark.read.parquet(s"$sf1Dir/embeddings.parquet")
     val sample = spark.read

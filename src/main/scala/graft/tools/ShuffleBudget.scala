@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Shuffle-byte BUDGETS for the headline heavies — the one cluster-scale
@@ -10,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * a real cluster; wall time does not). Measures, per query, the total
   * shuffle bytes WRITTEN across every job the entry triggers (batch
   * actions, eager localCheckpoints, streaming micro-batches — a
-  * task-level listener sees them all, where QueryExecutionListener
+  * scheduler listener sees them all, where QueryExecutionListener
   * misses streams), and commits them as SHUFFLE_BUDGET.json. A plan
   * regression that doubles exchange volume — a lost broadcast, a
   * pre-aggregation that stopped combining map-side, a join that started
@@ -21,56 +20,21 @@ import org.apache.spark.sql.SparkSession
   * Each query runs TWICE: the first run stages memoized index artifacts
   * and warms caches (attributing one-time staging shuffles to whichever
   * query runs first would make budgets order-dependent); only the second
-  * run is measured. Listener delivery is asynchronous, so the tally is
-  * read after a quiescence poll, never immediately.
+  * run is measured, under its own [[QueryProfile]] label.
   */
 object ShuffleBudget {
-
-  final class Tally extends SparkListener {
-    private val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-    def bytes: Long = acc.get()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) { acc.addAndGet(m.shuffleWriteMetrics.bytesWritten); () }
-    }
-  }
-
-  /** Wait until the async listener bus has drained for this tally:
-    * stable reading across two consecutive polls (bounded, loud on
-    * timeout — a silent early read would under-count the budget).
-    */
-  private def quiesce(t: Tally, timeoutMs: Long = 10000L): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last = -1L
-    var stable = 0
-    while (stable < 2) {
-      require(System.currentTimeMillis() < deadline,
-        "shuffle tally never quiesced — listener bus backed up")
-      Thread.sleep(200L)
-      val now = t.bytes
-      if (now == last) stable += 1 else { stable = 0; last = now }
-    }
-  }
 
   /** Measured shuffle-bytes per catalog entry (second-run semantics, see
     * object doc). Shared by the committed-artifact main and the
     * per-round spec gate so the two can never measure differently.
     */
   def measure(spark: SparkSession, names: Seq[String],
-              sfDir: String): Seq[(String, Long)] = {
-    val tally = new Tally
-    spark.sparkContext.addSparkListener(tally)
-    try names.map { n =>
+              sfDir: String): Seq[(String, Long)] =
+    names.map { n =>
       val fn = graft.queries.QueryCatalog.all(n)
       fn(spark, sfDir).count() // warmup: stage artifacts, prime memos
-      quiesce(tally)
-      val before = tally.bytes
-      fn(spark, sfDir).count()
-      quiesce(tally)
-      n -> (tally.bytes - before)
+      n -> QueryProfile.measure(spark)(fn(spark, sfDir).count()).shuffleBytes
     }
-    finally spark.sparkContext.removeSparkListener(tally)
-  }
 
   /** The budgeted set: the ten most expensive headline entries by the
     * r12 headline bench — the queries whose exchange volume dominates
@@ -87,15 +51,8 @@ object ShuffleBudget {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.LocalSession.cpus
+    val spark = graft.LocalSession("ERROR")
     val rows = measure(spark, budgetedQueries, sfDir)
     rows.foreach { case (n, b) =>
       println(f"== $n%-28s ${b / 1024.0 / 1024.0}%9.2f MiB shuffled")

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Partitioning-invariance witness for the r17 derived-state-partition
   * change: runs each touched stream query once WITH the derived scoping
@@ -15,29 +13,16 @@ import graft.SparkEntry
 object StreamInvarianceCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     val names = Seq("x_stream_latedata", "x_stream_distinct",
       "x_stream_quantiles", "x_stream_drift", "x_stream_heavyhitters",
       "x_stream_exactdedup", "q_stream_hourly")
     var failures = 0
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def rows(bypass: Boolean): Seq[String] = {
-        spark.conf.set("spark.graft.stream.derivePartitions",
-          (!bypass).toString)
-        try fn(spark, sfDir).collect().map(_.toString).toSeq.sorted
-        finally spark.conf.set("spark.graft.stream.derivePartitions", "true")
-      }
-      val derived = rows(bypass = false)
-      val static = rows(bypass = true)
+      def rows: Seq[String] = fn(spark, sfDir).collect().map(_.toString).toSeq.sorted
+      val derived = rows
+      val static = graft.streaming.StreamTuning.withoutDerivedPartitions(rows)
       if (derived == static)
         println(s"[invar] $name: IDENTICAL (${derived.size} rows)")
       else {

@@ -1,8 +1,5 @@
 package graft.api
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -114,26 +111,24 @@ class KeyedWriteSpec extends AnyFunSuite {
     assert(HostedTables.write(df, id, WriteMode.Upsert, Some("k")).isLeft)
   }
 
-  /** Spark jobs the calling thread runs inside `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val label = "graft.test.jobs"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(label) == tag)) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    sc.setLocalProperty(label, tag)
-    try body
-    finally {
-      sc.setLocalProperty(label, null)
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(l)
-    }
-    jobs.get
+  test("a merge honours every unique index, not only its own key's") {
+    HostedStore.dropByTitle("two_indexes")
+    val df = Seq((1L, "x"), (2L, "y")).toDF("a", "b")
+    val (id, _) = HostedTables.save(df, "two_indexes", Some("a")).fold(e => fail(e), identity)
+    HostedStore.addUniqueIndex(id, "b")
+    def rows = HostedTables.read(spark, id).orderBy("a").collect().toSeq
+    // key 3 is new, but its "x" is row 1's value of the indexed b
+    assert(HostedTables.write(Seq((3L, "x")).toDF("a", "b"), id, WriteMode.Upsert, Some("a")).isLeft)
+    assert(rows == Seq(Row(1L, "x"), Row(2L, "y")))
+    // both indexes still hold, so writes through either key go on working
+    HostedTables.write(Seq((5L, "y"), (4L, "z")).toDF("a", "b"), id, WriteMode.Upsert, Some("b"))
+      .fold(e => fail(e), identity)
+    HostedTables.write(Seq((2L, "w")).toDF("a", "b"), id, WriteMode.Append).fold(e => fail(e), identity)
+    assert(rows == Seq(Row(1L, "x"), Row(2L, "w"), Row(4L, "z"), Row(5L, "y")))
   }
+
+  /** Spark jobs the calling thread runs inside `body`. */
+  private def jobsOf(body: => Unit): Long = graft.tools.QueryProfile.measure(spark)(body).jobs
 
   test("job counts: one emptiness check and one sort per keyed write") {
     // a parquet read, unlike spark.range, is not range-partitioned already,

@@ -129,11 +129,8 @@ class SigRegistrySpec extends AnyFunSuite {
       try {
         val q = Dedup.serveSigRegistry(spark, path, one, "doc_id", "text")
         q.collect()
-        // the listener bus is async: poll until the bands-scan plan lands
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        import scala.jdk.CollectionConverters._
-        while (!plans.asScala.exists(_.contains("/bands")) &&
-               System.nanoTime() < deadline) Thread.sleep(50)
+        // the listener bus is async: wait until it delivered every plan
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         q.queryExecution.executedPlan.toString
       } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._

@@ -10,10 +10,7 @@ class ProgressListenerSpec extends AnyFunSuite {
     val l = ProgressListener.attach(spark, lines += _)
     try {
       val n = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").count()
-      // listener bus is async; poll briefly for the stage events
-      val deadline = System.currentTimeMillis() + 10000
-      while (l.totalRecordsRead < 1500 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(n == 1500)
       assert(l.totalRecordsRead >= 1500, l.stages.toString)
       assert(lines.exists(_.contains("[progress]")))
