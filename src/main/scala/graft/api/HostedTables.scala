@@ -139,8 +139,7 @@ object HostedTables {
         case m => writer.mode("append").option("writeMode", m.name)
       }
       key.foreach(k => withMode.option("key", k))
-      withMode.save()
-      Right(GraftWriteReports.last(itemId))
+      Right(GraftWriteReports.capture(df.sparkSession.sparkContext)(withMode.save()))
     } catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
 
   /** Create (and "publish") a new hosted table from a DataFrame — schema
@@ -158,8 +157,11 @@ object HostedTables {
       id <- create(df, norm, key, properties)
     } yield id)
 
-  /** [[createTable]] past its checks, which `save` has already made. */
-  private def create(df: DataFrame, norm: String, key: Option[String],
+  /** [[createTable]] past its checks: `norm` is a normalized title, and
+    * the caller checks the frame is not empty (the write that follows
+    * does).
+    */
+  private[graft] def create(df: DataFrame, norm: String, key: Option[String],
                      properties: Map[String, String]): Either[String, String] =
     try {
       val id = HostedSinks.active.create(norm, TimestampNorm.toUtc(df).schema, properties)

@@ -28,7 +28,9 @@ object ParquetStage {
 
   /** Write `df` as the single plain file `<dir>/<name>.parquet`
     * (coalesced to one part), optionally stamping its mtime (file-stream
-    * sources process in mtime order). Returns the file path.
+    * sources process in mtime order). Whatever sits at the target is
+    * removed first, a part-file directory left by an older writer too.
+    * Returns the file path.
     */
   def stageSingleFile(df: DataFrame, dir: String, name: String,
                       mtime: Option[Long] = None): String = {
@@ -36,7 +38,7 @@ object ParquetStage {
     val tmp = s"$dir/__tmp_$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val target = java.nio.file.Paths.get(s"$dir/$name.parquet")
-    java.nio.file.Files.deleteIfExists(target)
+    rmRec(target.toString)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.endsWith(".parquet"))
       .getOrElse(sys.error(s"staging $name: no part file written under $tmp"))

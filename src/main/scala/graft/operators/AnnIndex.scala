@@ -703,8 +703,8 @@ object AnnIndex {
     * touched-cells fold — batch the tail (hourly/daily) to amortize,
     * exactly like CDC log compaction itself. Equivalence with a full
     * rebuild of the post-tail snapshot under the same centroids is
-    * spec-gated; StressCheck's `sync` mode measures the flat-in-index-
-    * size cost.
+    * spec-gated. The cost is flat in index size (corpus ×1/×4/×16 at
+    * nlist=64, the numbers in docs/SCALE.md).
     */
   def ivfSyncFromLog(spark: SparkSession, path: String, tail: DataFrame,
                      keyCol: String, seqCol: String, opCol: String,

@@ -197,13 +197,17 @@ private[graft] object CatalogHelpers {
       "decontam" -> clean, "domain_mix" -> mixed, "token_budget" -> budgeted)
   }
 
-  /** Fresh hosted copy of a fixture projection (drop + create + append). */
+  /** Fresh hosted copy of a fixture projection (drop + create + append).
+    * The append's emptiness check is the only one: the table is created
+    * through the unchecked step `save` uses.
+    */
   def hostedCopy(s: SparkSession, dir: String, table: String,
                          title: String, key: Option[String],
                          cols: Seq[String]): String = synchronized {
     HostedStore.dropByTitle(title)
     val df = t(s, dir, table).select(cols.map(col): _*)
-    val id = HostedTables.createTable(df, title, key).fold(sys.error, identity)
+    val id = graft.core.ServiceName.normalize(title)
+      .flatMap(HostedTables.create(df, _, key, Map.empty)).fold(sys.error, identity)
     HostedTables.write(df, id, WriteMode.Append).fold(sys.error, identity)
     id
   }

@@ -31,8 +31,11 @@ import graft.core.WriteMode
   * *here*, not in the Spark reader: it models the pushdown the remote API
   * supports, so the connector's `.explain` shows which predicates left the
   * Spark plan.
+  *
+  * It is the in-process [[HostedTableSink]] and the default of
+  * [[HostedSinks.active]].
   */
-object HostedStore {
+object HostedStore extends HostedTableSink {
 
   /** A service-side index definition, named the way the reference names
     * the unique key constraint: `UX_<TITLE>_<TABLE>_<field>_ASC`
@@ -152,14 +155,16 @@ object HostedStore {
     filteredCache.synchronized(filteredCache.clear())
   }
 
-  def drop(itemId: String): Unit = {
-    tables.remove(itemId)
+  /** Removes the table; true when it existed. */
+  def drop(itemId: String): Boolean = {
+    val existed = tables.remove(itemId) != null
     staged.keySet.removeIf(_._1 == itemId)
     // cache keys pin their table's rows vector — a dropped multi-GB
     // table must not stay reachable through the scan cache until eight
     // later misses happen to evict it (drops are rare; clearing the
     // 8-slot cache wholesale is cheaper than mapping itemId -> keys)
     filteredCache.synchronized(filteredCache.clear())
+    existed
   }
 
   def dropByTitle(title: String): Unit =
@@ -178,8 +183,10 @@ object HostedStore {
 
   def exists(itemId: String): Boolean = tables.containsKey(itemId)
 
+  def schemaOf(itemId: String): StructType = get(itemId).schema
+
   def create(title: String, schema: StructType,
-             properties: Map[String, String] = Map.empty): String = {
+             properties: Map[String, String]): String = {
     // No lock needed: the id is fresh (atomic counter), so nobody can
     // reference it until this method returns it.
     val id = s"item_${nextId.getAndIncrement()}"
@@ -258,7 +265,7 @@ object HostedStore {
     * [[appendBatch]] does. Returns rows removed.
     */
   def deleteByKey(itemId: String, keyField: String, keys: Seq[Any],
-                  batchId: Option[String] = None): Long =
+                  batchId: Option[String]): Long =
     computeItem(itemId) { t =>
       if (batchId.exists(t.appliedBatches.contains)) (t, 0L)
       else {
@@ -524,7 +531,7 @@ object HostedStore {
       batch: Seq[Row],
       mode: WriteMode,
       key: Option[String],
-      batchId: Option[String] = None): Long =
+      batchId: Option[String]): Long =
     computeItem(itemId)(t => appliedPure(t, batch, mode, key, batchId))
 
   /** PURE single-batch apply: old state → (new state, rows affected).

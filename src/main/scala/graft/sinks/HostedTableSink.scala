@@ -109,7 +109,7 @@ trait HostedTableSink {
   * would construct the service from connector options inside tasks.)
   */
 object HostedSinks {
-  @volatile var active: HostedTableSink = InProcessHostedSink
+  @volatile var active: HostedTableSink = HostedStore
 }
 
 /** Serializable pointer to a portal service. Connector options
@@ -135,56 +135,5 @@ object SinkResolver {
     case None    => HostedSinks.active
     case Some(r) =>
       cache.computeIfAbsent(r, rr => new RestHostedService(rr.url, rr.token))
-  }
-}
-
-/** [[HostedStore]] exposed through the sink seam. */
-object InProcessHostedSink extends HostedTableSink {
-  override def resolveByTitle(title: String): Option[String] = HostedStore.resolveByTitle(title)
-  override def create(title: String, schema: StructType,
-                      properties: Map[String, String]): String =
-    HostedStore.create(title, schema, properties)
-  override def truncate(itemId: String): Unit = HostedStore.truncate(itemId)
-  override def addUniqueIndex(itemId: String, field: String): String =
-    HostedStore.addUniqueIndex(itemId, field)
-  override def fieldHasUniqueIndex(itemId: String, field: String): Boolean =
-    HostedStore.fieldHasUniqueIndex(itemId, field)
-  override def setProperties(itemId: String, props: Map[String, String]): Unit =
-    HostedStore.setProperties(itemId, props)
-  override def propertiesOf(itemId: String): Map[String, String] =
-    HostedStore.propertiesOf(itemId)
-  override def queryCount(itemId: String, filters: Array[Filter]): Long =
-    HostedStore.queryCount(itemId, filters)
-  override def queryPage(itemId: String, offset: Long, count: Long,
-                         requiredCols: Array[String], filters: Array[Filter]): Iterator[Row] =
-    HostedStore.queryPage(itemId, offset, count, requiredCols, filters)
-  override def appendBatch(itemId: String, batch: Seq[Row], mode: WriteMode,
-                           key: Option[String], batchId: Option[String]): Long =
-    HostedStore.appendBatch(itemId, batch, mode, key, batchId)
-  override def deleteByKey(itemId: String, keyField: String, keys: Seq[Any],
-                           batchId: Option[String]): Long =
-    HostedStore.deleteByKey(itemId, keyField, keys, batchId)
-  override def stageBatch(itemId: String, partKey: String, attemptId: Long,
-                          chunkId: Int, batch: Seq[Row]): Unit =
-    HostedStore.stageBatch(itemId, partKey, attemptId, chunkId, batch)
-  override def commitStaged(itemId: String, partKey: String, attemptId: Long,
-                            mode: WriteMode, key: Option[String]): Long =
-    HostedStore.commitStaged(itemId, partKey, attemptId, mode, key)
-  override def discardStaged(itemId: String, partKey: String, attemptId: Long): Unit =
-    HostedStore.discardStaged(itemId, partKey, attemptId)
-  override def queryMinMax(itemId: String, filters: Array[Filter],
-                           field: String, isMin: Boolean): Any =
-    HostedStore.queryMinMax(itemId, filters, field, isMin)
-  override def queryGroupedStats(itemId: String, filters: Array[Filter],
-                                 groupFields: Seq[String],
-                                 specs: Seq[(String, Option[String])]): Seq[Row] =
-    HostedStore.queryGroupedStats(itemId, filters, groupFields, specs)
-  override def exists(itemId: String): Boolean = HostedStore.exists(itemId)
-  override def schemaOf(itemId: String): StructType = HostedStore.get(itemId).schema
-  override def titles: Seq[String] = HostedStore.titles
-  override def drop(itemId: String): Boolean = {
-    val existed = HostedStore.exists(itemId)
-    HostedStore.drop(itemId)
-    existed
   }
 }

@@ -485,10 +485,8 @@ class GraftWrite(itemId: String, schema: StructType, mode: WriteMode,
       GraftWriterFactory(itemId, schema, mode, key, chunkSize,
         java.util.UUID.randomUUID().toString, svc)
     }
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val report = messages.toSeq.map(_.asInstanceOf[GraftCommitMessage])
-      GraftWriteReports.record(itemId, report)
-    }
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      GraftWriteReports.record(messages.toSeq.map(_.asInstanceOf[GraftCommitMessage]))
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
 
@@ -508,9 +506,7 @@ class GraftWrite(itemId: String, schema: StructType, mode: WriteMode,
       GraftStreamingWriterFactory(itemId, schema, mode, key, chunkSize, queryId,
         svc)
     }
-    override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      GraftWriteReports.record(itemId,
-        messages.toSeq.map(_.asInstanceOf[GraftCommitMessage]))
+    override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
   }
 }
@@ -530,14 +526,37 @@ case class GraftCommitMessage(partitionId: Int, rows: Long, batches: Int,
                               minKey: String, maxKey: String)
     extends WriterCommitMessage
 
-/** Last write's per-partition audit report (the reference's chunk-result
-  * list, `src/agol_pandas.py:459-461`), exposed to the high-level API.
+/** Per-write audit reports (the reference's chunk-result list,
+  * `src/agol_pandas.py:459-461`) for the high-level API. A caller runs its
+  * write inside [[capture]], which gives the calling thread a fresh id in
+  * a local property (the way [[graft.tools.QueryProfile]]
+  * labels jobs); the batch commit files its report under that id and
+  * `capture` takes it back. Writes made outside `capture` (raw
+  * `format("graft")` saves, streaming epochs) file nothing.
   */
 object GraftWriteReports {
+  private val Key = "graft.write.report"
   private val reports = new java.util.concurrent.ConcurrentHashMap[String, Seq[GraftCommitMessage]]()
-  def record(itemId: String, r: Seq[GraftCommitMessage]): Unit = reports.put(itemId, r)
-  def last(itemId: String): Seq[GraftCommitMessage] =
-    Option(reports.get(itemId)).getOrElse(Seq.empty)
+
+  /** Runs `write` and returns the report its batch commit filed, empty
+    * when it filed none.
+    */
+  def capture(sc: org.apache.spark.SparkContext)(write: => Unit): Seq[GraftCommitMessage] = {
+    val id = java.util.UUID.randomUUID().toString
+    val before = sc.getLocalProperty(Key)
+    sc.setLocalProperty(Key, id)
+    try {
+      write
+      Option(reports.get(id)).getOrElse(Seq.empty)
+    } finally {
+      sc.setLocalProperty(Key, before)
+      reports.remove(id)
+    }
+  }
+
+  private[sources] def record(report: Seq[GraftCommitMessage]): Unit =
+    Option(org.apache.spark.SparkContext.getOrCreate().getLocalProperty(Key))
+      .foreach(reports.put(_, report))
 }
 
 case class GraftWriterFactory(itemId: String, schema: StructType,

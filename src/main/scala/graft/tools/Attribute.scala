@@ -13,8 +13,8 @@ import graft.tools.JsonNum.num
   * it prints one JSON line: wall time, jobs, stages, shuffle bytes
   * written, executor CPU, and `fixed_cost_share` = 1 − Σ executor run
   * time ÷ (wall × cores), the share of the cores' wall time no task ran.
-  * Then it prints the last run's stages (call site, tasks, records in and
-  * out, shuffle bytes, run ms), and with `--plan` the query's formatted
+  * Then it prints the last run's stages (SQL execution id, call site,
+  * tasks, records in and out, shuffle bytes, run ms), and with `--plan` the query's formatted
   * physical plan.
   */
 object Attribute {
@@ -45,10 +45,10 @@ object Attribute {
           s""""executor_cpu_s":${num(w.cpuNs / 1e9, 3)},""" +
           s""""fixed_cost_share":${num(1.0 - w.runMs / 1e3 / (wallS * cores), 3)}}""")
       }
-      println(f"${"stage"}%6s  ${"call site"}%-44s ${"tasks"}%6s ${"records in"}%12s " +
+      println(f"${"stage"}%6s ${"sql"}%5s  ${"call site"}%-44s ${"tasks"}%6s ${"records in"}%12s " +
         f"${"records out"}%12s ${"shuffle bytes"}%14s ${"run ms"}%9s")
       profile.stagesOf(s"$q#$runs").sortBy(_.id).foreach { s =>
-        println(f"${s.id}%6d  ${s.callSite.take(44)}%-44s ${s.tasks}%6d ${s.recordsIn}%12d " +
+        println(f"${s.id}%6d ${s.executionId}%5s  ${s.callSite.take(44)}%-44s ${s.tasks}%6d ${s.recordsIn}%12d " +
           f"${s.recordsOut}%12d ${s.shuffleBytes}%14d ${s.runMs}%9d")
       }
       if (plan) println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))

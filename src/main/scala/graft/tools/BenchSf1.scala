@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetStage
 import graft.operators.{Dedup, Similarity}
 
 /** Scale-ratio pricing: run the headline dedup/ANN operators at sf0.1 AND
@@ -23,11 +24,31 @@ import graft.operators.{Dedup, Similarity}
   * corpus (constant cell size ⇒ linear candidate work; a fixed nlist is
   * structurally n²/nlist), while fixed-size reference sets (eval suites)
   * stay fixed across scales and query-set IVF keeps nlist fixed.
+  *
+  * Every mode is one [[BenchSf1.Sweep]]: a list of probe names timed at
+  * one or two scales, then one artifact line built by [[BenchSf1.report]].
+  * `buildonly` stops after building the sf1 corpus; pair it with
+  * `Attribute <queries> /tmp/graft_sf1` to price any catalog query at 10×.
   */
 object BenchSf1 {
   private val sf01 = "/root/testdata/sf0.1"
   private val sf1Dir = "/tmp/graft_sf1"
   private val copies = 10
+  private val sf10Dir = "/tmp/graft_sf10"
+  private val copies10 = 100
+  private val sf100Dir = "/tmp/graft_sf100"
+  private val copies100 = 1000
+  private val stride3 = 100000000000L // sf10 ids stay < 1e10; copies disjoint
+
+  /** One scale of a sweep: `key` names it in the artifact, `label` on the
+    * console, and `m` (copies of sf0.1) scales the knobs that must grow
+    * with the corpus.
+    */
+  private[tools] final case class Scale(key: String, label: String, dir: String, m: Int)
+  private val Sf01 = Scale("sf01", "sf0.1", sf01, 1)
+  private val Sf1 = Scale("sf1", "sf1", sf1Dir, copies)
+  private val Sf10 = Scale("sf10", "sf10", sf10Dir, copies10)
+  private val Sf100 = Scale("sf100", "sf100", sf100Dir, copies100)
 
   /** The heaviest sf1 probes (by sf1 wall time in BENCH_SF1.json) — the
     * small-heap drill re-runs exactly these at sf1 under a deliberately
@@ -35,21 +56,165 @@ object BenchSf1 {
     * graft.tools.BenchSf1 smallheap"`) to back the bounded-state claims
     * (capped collect_list buckets, capacity sketches, cellCap, one-shard
     * exporter buffering) with an EMPIRICAL zero-OOM run, not just size
-    * assertions in specs. Writes BENCH_SMALLHEAP.json.
+    * assertions in specs. Writes BENCH_SMALLHEAP.json. Listed in probe
+    * order, the order the artifact reports them in.
     */
-  private val smallHeapProbes = Set(
-    "stream_heavyhitters", "stream_distinct", "split_leakfree", "emb_pca",
-    "dup_clusters", "cdc_stream", "minhash_lsh_est", "cross_decontam_est",
-    "incremental_est", "cdc_purge", "graph_triangles", "ivf_takedown")
+  private val smallHeapProbes = Seq(
+    "minhash_lsh_est", "dup_clusters", "cross_decontam_est", "incremental_est",
+    "split_leakfree", "stream_heavyhitters", "stream_distinct", "ivf_takedown",
+    "cdc_stream", "cdc_purge", "graph_triangles", "emb_pca")
+
+  /** TWO CLAIMS, measured at the second decade (sf1→sf10, 100×):
+    * (a) PLATEAU — the four probes whose sf0.1→sf1 ratios were
+    * attributed to regime boundaries (sketch eviction onset, capped
+    * candidate space, fixture density) have bounded structures that
+    * stop growing once saturated, so the next 10× must price closer
+    * to linear than the first (compare BENCH_SF1.json's ratios);
+    * (b) FLAT SERVES — the persisted-index serve family and the
+    * signature-registry serve read O(probed)/O(registry-scan) volume
+    * by construction, so a 10× corpus underneath must price ~1×
+    * (nlist grows with the corpus: probed volume constant), and the
+    * banded LSH miner + leakage-free split must stay ~linear.
+    * PRODUCTION SHAPES ONLY: the one-shot sim_ivfbq (per-call
+    * O(corpus·nlist) build+serve) is deliberately NOT priced here —
+    * that per-call rebuild is exactly what the persisted family
+    * (bq_serve/ivfbq_serve, measured flat alongside) exists to
+    * amortize, and pricing the diagnostic next to the production
+    * serves read as a scale smell (r13 verdict). It stays in the
+    * sf0.1→sf1 sweep as the documented rebuild-cost diagnostic.
+    */
+  private val sf10Probes = Seq("image_dedup", "stream_heavyhitters",
+    "stream_distinct", "entity_resolution",
+    "ivf_serve", "pq_serve", "ivfpq_serve",
+    "bq_serve", "ivfbq_serve",
+    "sig_registry_serve", "minhash_lsh_est", "split_leakfree")
+
+  /** THE THIRD DECADE (sf10 → sf100, 1000×), artifact-synthesized:
+    * the serve family reads O(probed cells)/O(compact codes) from
+    * 10×-inflated persisted artifacts (nlist 6400 → 64000, constant
+    * cell size), the registry serve scans a 10× decorrelated
+    * signature table, and the stream probes replay the SAME 10M
+    * input rows drawn from the 100×-user population — rows/s
+    * isolates per-row cost at third-decade key cardinality. The
+    * scan-floor serves (pq/bq) are linear in codes BY DESIGN and
+    * are expected to show it; the probed serves must stay near-flat.
+    */
+  private val sf100Probes = Seq("ivf_serve", "pq_serve", "bq_serve", "ivfbq_serve",
+    "sig_registry_serve", "stream_heavyhitters", "stream_distinct")
+
+  /** What one mode prices and the artifact it writes: `names` (empty =
+    * every probe) timed at each of `scales`. `gate` lists in
+    * `superlinear` the probes whose ratio exceeds it or that a scale
+    * could not price; `throughput` reports the stream probes' rows/s
+    * at both scales; `exitOnFailure` exits 1 when any run failed.
+    */
+  private[tools] final case class Sweep(mode: String, metric: String, artifact: String,
+                                        scales: Seq[Scale], names: Seq[String],
+                                        gate: Option[Double] = None,
+                                        throughput: Boolean = false,
+                                        exitOnFailure: Boolean = true)
+
+  /** The mode `args` name: `sf10`, else `sf100`, else `smallheap`, else
+    * the default sf0.1 → sf1 sweep over every probe.
+    */
+  private[tools] def sweepFor(args: Seq[String]): Sweep =
+    if (args.contains("sf10"))
+      Sweep("sf10", "sf10_scale_ratio", "BENCH_SF10.json", Seq(Sf1, Sf10), sf10Probes,
+        throughput = true)
+    else if (args.contains("sf100"))
+      Sweep("sf100", "sf100_scale_ratio", "BENCH_SF100.json", Seq(Sf10, Sf100), sf100Probes,
+        throughput = true)
+    else if (args.contains("smallheap"))
+      Sweep("smallheap", "smallheap_sf1_seconds", "BENCH_SMALLHEAP.json", Seq(Sf1),
+        smallHeapProbes)
+    else
+      Sweep("", "sf1_scale_ratio", "BENCH_SF1.json", Seq(Sf01, Sf1), Nil,
+        gate = Some(12.0), exitOnFailure = false)
+
+  /** A probe's best time in seconds at each scale of a sweep; None where
+    * every run failed.
+    */
+  private[tools] final case class Timing(name: String, secs: Seq[Option[Double]]) {
+    def ratio: Option[Double] = secs match {
+      case Seq(Some(a), Some(b)) => Some(b / a)
+      case _                     => None
+    }
+  }
+
+  /** The artifact line of a sweep. `heapMb` and `cpus` describe the JVM
+    * (read by the small-heap artifact); `eventRows` holds each scale's
+    * events row count (read by the throughput and sf100 artifacts).
+    */
+  private[tools] def report(sweep: Sweep, rows: Seq[Timing], heapMb: Long, cpus: String,
+                            eventRows: Seq[Long], failures: Seq[String],
+                            codegenErrors: Long): String = {
+    def num(o: Option[Double]) = o.fold("null")(JsonNum.num(_, 3))
+    def obj(kv: Seq[(String, String)]) =
+      kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    def list(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val keys = sweep.scales.map(_.key)
+    val copiesNow = sweep.scales.last.m.toString
+    val head = sweep.mode match {
+      case "smallheap" => Seq("heap_mb" -> heapMb.toString, "cpus" -> cpus,
+        "shuffle_partitions" -> "64", "copies" -> copiesNow)
+      case "sf100" => Seq("unit" -> "\"x\"", "copies" -> copiesNow,
+        "synthesized_artifacts" -> "true", "events_slice_rows" -> eventRows.last.toString)
+      case _ => Seq("unit" -> "\"x\"", "copies" -> copiesNow)
+    }
+    val queries = obj(rows.map { t =>
+      t.name -> (if (keys.size == 1) num(t.secs.head)
+                 else obj(keys.zip(t.secs.map(num)) :+ ("ratio" -> num(t.ratio))))
+    })
+    // a probe that cannot be priced at either scale fails the gate loudly
+    val superlinear = sweep.gate.map(g => "superlinear" -> list(rows.collect {
+      case t if t.ratio.exists(_ > g) || t.secs.exists(_.isEmpty) => t.name
+    }))
+    // ATTRIBUTION for the stream-replay walls: the stream probes' wall
+    // ratio tracks INPUT ROWS (a replay reprocesses the whole corpus by
+    // definition), while their state is measured capacity-bounded flat
+    // (STREAM_STATE.json). Rows/s at both scales makes that legible in
+    // the artifact itself: ~equal throughput across the decade = linear
+    // replay, no structural wall.
+    val throughput = if (!sweep.throughput) None else Some("stream_throughput" ->
+      obj(rows.collect {
+        case Timing(n, secs) if n.startsWith("stream_") && secs.forall(_.isDefined) =>
+          n -> obj(keys.zip(eventRows).zip(secs.flatten).map { case ((k, ev), s) =>
+            s"${k}_rows_per_sec" -> JsonNum.num(ev / s, 0)
+          })
+      }))
+    obj(Seq("metric" -> s""""${sweep.metric}"""") ++ head ++ Seq("queries" -> queries) ++
+      superlinear ++ throughput ++
+      Seq("failures" -> list(failures), "codegen_errors" -> codegenErrors.toString))
+  }
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     graft.api.Tables.load(s, dir, "documents")
   private def emb(s: SparkSession, dir: String): DataFrame =
     graft.api.Tables.load(s, dir, "embeddings")
 
-  /** Synthesize the 10× corpus once per run (materialized to parquet so
-    * both scales read from files and timings compare like-for-like).
+  /** `n` copies of `df`, unioned by name. Copy `i` adds `i * stride` to
+    * each of `keys`; every copy but the first then goes through
+    * `perturb`, so copy 0 keeps the source rows.
     */
+  private def inflated(df: DataFrame, n: Int, stride: Long, keys: Seq[String],
+                       perturb: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
+    (0 until n).map { i =>
+      val shifted = keys.foldLeft(df)((d, k) => d.withColumn(k, col(k) + lit(i * stride)))
+      if (i == 0) shifted else perturb(shifted, i)
+    }.reduce(_ unionByName _)
+
+  /** Per-ELEMENT deterministic jitter of copy `i`'s embeddings, not a
+    * constant offset: a constant shift per copy pushed every copy-i vector
+    * toward the same few centroids (one cell held ~10% of the corpus) —
+    * real corpora don't grow by translating themselves; jitter keeps each
+    * copy near its original, so cell occupancy scales linearly. Each
+    * inflation level uses its own multipliers.
+    */
+  private def jitter(idMul: Int, posMul: Int, copyMul: Int)(d: DataFrame, i: Int): DataFrame =
+    d.withColumn("embedding",
+      expr(s"transform(embedding, (x, p) -> cast(x + " +
+           s"((vec_id * $idMul + p * $posMul + $i * $copyMul) % 100 - 50) * 0.002 as float))"))
+
   /** Copy-unique text perturbation. The per-word suffix decorrelates the
     * SHINGLE space (dup density stays linear for text dedup), but it
     * barely moves the 8×8 block means of the rendered ASCII byte stream,
@@ -79,49 +244,29 @@ object BenchSf1 {
     translate(regexp_replace(tcol, "(\\S+)", "$1" + tag + i), src, dst)
   }
 
+  /** Synthesize the 10× corpus once per run (materialized to parquet so
+    * both scales read from files and timings compare like-for-like).
+    */
   private def buildSf1(s: SparkSession): Unit = {
-    val d0 = docs(s, sf01)
-    val inflatedDocs = (0 until copies).map { i =>
-      val shifted = d0.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))
-      if (i == 0) shifted
-      else shifted.withColumn("text", perturbText(col("text"), "x", i,
-        "aeiounsrtl"))
-    }.reduce(_ unionByName _)
-    inflatedDocs.write.mode("overwrite").parquet(s"$sf1Dir/documents.parquet")
-    val e0 = emb(s, sf01)
-    val inflatedEmb = (0 until copies).map { i =>
-      val shifted = e0.withColumn("vec_id", col("vec_id") + lit(i * 10000000L))
-      if (i == 0) shifted
-      // per-ELEMENT deterministic jitter, not a constant offset: a
-      // constant shift per copy pushed every copy-i vector toward the
-      // same few centroids (one cell held ~10% of the corpus) — real
-      // corpora don't grow by translating themselves; jitter keeps each
-      // copy near its original, so cell occupancy scales linearly
-      else shifted.withColumn("embedding",
-        expr(s"transform(embedding, (x, p) -> cast(x + " +
-             s"((vec_id * 31 + p * 7 + $i * 13) % 100 - 50) * 0.002 as float))"))
-    }.reduce(_ unionByName _)
-    inflatedEmb.write.mode("overwrite").parquet(s"$sf1Dir/embeddings.parquet")
+    inflated(docs(s, sf01), copies, 10000000L, Seq("doc_id"), (d, i) =>
+        d.withColumn("text", perturbText(col("text"), "x", i, "aeiounsrtl")))
+      .write.mode("overwrite").parquet(s"$sf1Dir/documents.parquet")
+    inflated(emb(s, sf01), copies, 10000000L, Seq("vec_id"), jitter(31, 7, 13))
+      .write.mode("overwrite").parquet(s"$sf1Dir/embeddings.parquet")
     // Relational fact tables: each copy shifts its keys by a copy-unique
     // stride so referential integrity holds WITHIN a copy and join
     // cardinality scales linearly (verbatim copies would multiply join
     // fan-out quadratically). Dimension tables (nation, region) are
     // policy-sized and stay fixed, like the eval-suite reference sets.
     val stride = 100000000L
-    def shift(df: DataFrame, keys: Seq[String], i: Int): DataFrame =
-      keys.foldLeft(df)((d, k) =>
-        d.withColumn(k, col(k) + lit(i * stride)))
-    def inflate(table: String, keys: Seq[String]): Unit = {
-      val base = graft.api.Tables.load(s, sf01, table)
-      (0 until copies).map(i => shift(base, keys, i))
-        .reduce(_ unionByName _)
+    def inflate(table: String, keys: String*): Unit =
+      inflated(graft.api.Tables.load(s, sf01, table), copies, stride, keys)
         .write.mode("overwrite").parquet(s"$sf1Dir/$table.parquet")
-    }
-    inflate("customer", Seq("c_custkey"))
-    inflate("orders", Seq("o_orderkey", "o_custkey"))
-    inflate("lineitem", Seq("l_orderkey", "l_suppkey", "l_partkey"))
-    inflate("supplier", Seq("s_suppkey"))
-    inflate("part", Seq("p_partkey"))
+    inflate("customer", "c_custkey")
+    inflate("orders", "o_orderkey", "o_custkey")
+    inflate("lineitem", "l_orderkey", "l_suppkey", "l_partkey")
+    inflate("supplier", "s_suppkey")
+    inflate("part", "p_partkey")
     Seq("nation", "region").foreach { tbl =>
       graft.api.Tables.load(s, sf01, tbl)
         .write.mode("overwrite").parquet(s"$sf1Dir/$tbl.parquet")
@@ -135,28 +280,9 @@ object BenchSf1 {
     // against a directory the glob matches nothing and the stream
     // silently prices an empty input (the first run of this suite
     // reported stream ratios of 0.02× for exactly that reason).
-    val ev = graft.api.Tables.load(s, sf01, "events")
-    val tmpEv = s"$sf1Dir/__events_tmp"
-    (0 until copies).map(i =>
-        ev.withColumn("user_id", col("user_id") + lit(i * stride)))
-      .reduce(_ unionByName _)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmpEv)
-    val target = java.nio.file.Paths.get(s"$sf1Dir/events.parquet")
-    // a previous run may have left a DIRECTORY at the target path
-    def rmRec(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        finally walk.close()
-      }
-    rmRec(target)
-    val part = new java.io.File(tmpEv).listFiles()
-      .find(f => f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, target)
-    rmRec(java.nio.file.Paths.get(tmpEv))
+    ParquetStage.stageSingleFile(
+      inflated(graft.api.Tables.load(s, sf01, "events"), copies, stride, Seq("user_id")),
+      sf1Dir, "events")
   }
 
   /** Synthesize the 100× corpus for the SF10 RUN — only the tables its
@@ -171,62 +297,27 @@ object BenchSf1 {
     * 100× corpus has no cross-copy exact duplicates the miners would
     * quadratically collapse.
     */
-  private val sf10Dir = "/tmp/graft_sf10"
-  private val copies10 = 100
   private def buildSf10(s: SparkSession): Unit = {
     val lvl2 = 10
     val stride2 = 1000000000L
-    val d1 = s.read.parquet(s"$sf1Dir/documents.parquet")
-    (0 until lvl2).map { a =>
-      val shifted = d1.withColumn("doc_id", col("doc_id") + lit(a * stride2))
-      if (a == 0) shifted
-      // level-2 pool draws from letters level 1 leaves intact (its five
-      // rotated sources come out of "aeiounsrtl"), and its translate
-      // targets live in a disjoint codepoint block
-      else shifted.withColumn("text", perturbText(col("text"), "y", a,
-        "cdhmpbgfvk", dstBase = 0x180))
-    }.reduce(_ unionByName _)
+    def sf1(table: String) = s.read.parquet(s"$sf1Dir/$table.parquet")
+    // level-2 pool draws from letters level 1 leaves intact (its five
+    // rotated sources come out of "aeiounsrtl"), and its translate
+    // targets live in a disjoint codepoint block
+    inflated(sf1("documents"), lvl2, stride2, Seq("doc_id"), (d, a) =>
+        d.withColumn("text", perturbText(col("text"), "y", a,
+          "cdhmpbgfvk", dstBase = 0x180)))
       .write.mode("overwrite").parquet(s"$sf10Dir/documents.parquet")
-    val c1 = s.read.parquet(s"$sf1Dir/customer.parquet")
-    (0 until lvl2).map(a =>
-        c1.withColumn("c_custkey", col("c_custkey") + lit(a * stride2)))
-      .reduce(_ unionByName _)
+    inflated(sf1("customer"), lvl2, stride2, Seq("c_custkey"))
       .write.mode("overwrite").parquet(s"$sf10Dir/customer.parquet")
     // embeddings for the serve/ANN probes: per-element jitter per copy,
-    // exactly like buildSf1's second level — a constant per-copy offset
-    // would pile every copy into the same few cells (see buildSf1)
-    val emb1 = s.read.parquet(s"$sf1Dir/embeddings.parquet")
-    (0 until lvl2).map { a =>
-      val shifted = emb1.withColumn("vec_id", col("vec_id") + lit(a * stride2))
-      if (a == 0) shifted
-      else shifted.withColumn("embedding",
-        expr(s"transform(embedding, (x, p) -> cast(x + " +
-             s"((vec_id * 37 + p * 11 + $a * 17) % 100 - 50) * 0.002 as float))"))
-    }.reduce(_ unionByName _)
+    // like buildSf1's
+    inflated(sf1("embeddings"), lvl2, stride2, Seq("vec_id"), jitter(37, 11, 17))
       .write.mode("overwrite").parquet(s"$sf10Dir/embeddings.parquet")
     // events: same event-time range (window count is policy), 100× rows
     // and users; ONE plain file for the streams' leaf-name glob
-    val e1 = s.read.parquet(s"$sf1Dir/events.parquet")
-    val tmpEv = s"$sf10Dir/__events_tmp"
-    (0 until lvl2).map(a =>
-        e1.withColumn("user_id", col("user_id") + lit(a * stride2)))
-      .reduce(_ unionByName _)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(tmpEv)
-    def rmRec(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        finally walk.close()
-      }
-    val target = java.nio.file.Paths.get(s"$sf10Dir/events.parquet")
-    rmRec(target)
-    val part = new java.io.File(tmpEv).listFiles()
-      .find(f => f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, target)
-    rmRec(java.nio.file.Paths.get(tmpEv))
+    ParquetStage.stageSingleFile(
+      inflated(sf1("events"), lvl2, stride2, Seq("user_id")), sf10Dir, "events")
   }
 
   // ---- SF100: the synthesized THIRD decade (artifact-only) ----
@@ -242,41 +333,12 @@ object BenchSf1 {
   // the same input rows as sf10's full replay, so the rows/s comparison
   // isolates per-row cost at the third decade's key cardinality instead
   // of paying a 100M-row wall that measures nothing but replay length.
-  private val sf100Dir = "/tmp/graft_sf100"
-  private val copies100 = 1000
-  private val stride3 = 100000000000L // sf10 ids stay < 1e10; copies disjoint
-
-  private def singleFileParquet(df: DataFrame, target: String): Unit = {
-    val tmp = target + "__tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    def rmRec(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        finally walk.close()
-      }
-    val tpath = java.nio.file.Paths.get(target)
-    rmRec(tpath)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, tpath)
-    rmRec(java.nio.file.Paths.get(tmp))
-  }
-
   private def buildSf100(s: SparkSession): Unit = {
     val lvl3 = 10
     // embeddings: per-element jitter per copy (the buildSf10 recipe) —
     // the pq/bq scan-floor builds and the serve re-ranks read this
-    val emb10 = s.read.parquet(s"$sf10Dir/embeddings.parquet")
-    (0 until lvl3).map { a =>
-      val shifted = emb10.withColumn("vec_id", col("vec_id") + lit(a * stride3))
-      if (a == 0) shifted
-      else shifted.withColumn("embedding",
-        expr(s"transform(embedding, (x, p) -> cast(x + " +
-          s"((vec_id * 41 + p * 13 + $a * 19) % 100 - 50) * 0.002 as float))"))
-    }.reduce(_ unionByName _)
+    inflated(s.read.parquet(s"$sf10Dir/embeddings.parquet"), lvl3, stride3,
+        Seq("vec_id"), jitter(41, 13, 19))
       .write.mode("overwrite").parquet(s"$sf100Dir/embeddings.parquet")
     // events SLICE: a 1/10 row-sample of sf10 × 10 user-shifted copies =
     // sf10's row count at ~10× its user cardinality; ONE plain file for
@@ -284,11 +346,8 @@ object BenchSf1 {
     val e10 = s.read.parquet(s"$sf10Dir/events.parquet")
     val sampled = e10.filter(
       pmod(xxhash64(col("event_id")), lit(10)) === 0)
-    singleFileParquet(
-      (0 until lvl3).map(a =>
-          sampled.withColumn("user_id", col("user_id") + lit(a * stride3)))
-        .reduce(_ unionByName _),
-      s"$sf100Dir/events.parquet")
+    ParquetStage.stageSingleFile(
+      inflated(sampled, lvl3, stride3, Seq("user_id")), sf100Dir, "events")
     // signature registry: id-shifted copies with a per-copy XOR mix so
     // copies land in DISTINCT band buckets (identical signatures would
     // stack every bucket 10 deep — a degenerate shape no real registry
@@ -300,15 +359,10 @@ object BenchSf1 {
     val reg10 = s.read.parquet(graft.operators.AnnIndex.resolveDir(
         s, s"$sigRegDir/sf10", "sigs"))
       .select("doc_id", "sig")
-    val sigs100 = (0 until lvl3).map { a =>
-      val shifted = reg10.withColumn("doc_id", col("doc_id") + lit(a * stride3))
-      if (a == 0) shifted
-      else {
-        val mask = a.toLong * 0x9E3779B97F4A7C15L
-        shifted.withColumn("sig",
-          expr(s"transform(sig, h -> h ^ CAST($mask AS BIGINT))"))
-      }
-    }.reduce(_ unionByName _)
+    val sigs100 = inflated(reg10, lvl3, stride3, Seq("doc_id"), (d, a) => {
+      val mask = a.toLong * 0x9E3779B97F4A7C15L
+      d.withColumn("sig", expr(s"transform(sig, h -> h ^ CAST($mask AS BIGINT))"))
+    })
     val (bb100, sb100) = sigBucketsFor(copies100)
     Dedup.buildSigRegistryFromSignatures(sigs100, "doc_id",
       s"$sigRegDir/sf100", m10.numHashes, m10.bands, m10.shingleN,
@@ -394,7 +448,7 @@ object BenchSf1 {
     * the third decade), so serving a fixed query set prices as two
     * balanced √n terms instead of one linear one.
     */
-  private def buildServeIndex(s: SparkSession, dir: String, m: Int): Unit =
+  private def buildServeIndex(s: SparkSession, dir: String): Unit =
     graft.operators.AnnIndex.ivfBuild(emb(s, dir), "vec_id", "embedding",
       s"$ivfIdxDir/${tagOf(dir)}")
 
@@ -412,7 +466,7 @@ object BenchSf1 {
     * each probed member is a compact code (the pq_serve convention).
     */
   private val ivfpqIdxDir = "/tmp/graft_sf1_ivfpqidx"
-  private def buildIvfPqIndex(s: SparkSession, dir: String, m: Int): Unit =
+  private def buildIvfPqIndex(s: SparkSession, dir: String): Unit =
     graft.operators.AnnIndex.ivfpqBuild(emb(s, dir), "vec_id", "embedding",
       s"$ivfpqIdxDir/${tagOf(dir)}")
 
@@ -432,7 +486,7 @@ object BenchSf1 {
     * sim_ivfbq probe prices the per-call rebuild this build amortizes).
     */
   private val ivfbqIdxDirB = "/tmp/graft_sf1_ivfbqidx"
-  private def buildIvfBqIndex(s: SparkSession, dir: String, m: Int): Unit =
+  private def buildIvfBqIndex(s: SparkSession, dir: String): Unit =
     graft.operators.AnnIndex.ivfbqBuild(emb(s, dir), "vec_id", "embedding",
       s"$ivfbqIdxDirB/${tagOf(dir)}")
 
@@ -505,13 +559,11 @@ object BenchSf1 {
 
   def main(args: Array[String]): Unit = {
     val cpus = graft.LocalSession.cpus
-    val smallHeap = args.contains("smallheap")
-    val sf10Mode = args.contains("sf10")
-    val sf100Mode = args.contains("sf100")
+    val sweep = sweepFor(args.toSeq)
     val spark = graft.LocalSession("ERROR")
     CodegenErrors.install()
-    if (smallHeap) {
-      val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
+    val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
+    if (args.contains("smallheap")) {
       require(heapMb <= 2200,
         s"small-heap drill launched with ${heapMb}MB heap; run with " +
           "SPARK_DRIVER_MEM=2g SPARK_GRAFT_CPUS=8")
@@ -526,61 +578,62 @@ object BenchSf1 {
       println(s"[bench-sf1] built $sf1Dir (buildonly)")
       spark.stop(); return
     }
-    if (sf10Mode) {
-      // stage what the sf10 probe set reads: image hashes + signature
-      // registries + the persisted serve indexes at BOTH scales (nlist
-      // grows with the corpus — 64·m, the constant-cell-size posture)
-      buildSf10(spark)
-      Seq((sf1Dir, copies), (sf10Dir, copies10)).foreach { case (d, m) =>
-        stageImageHashes(spark, d)
-        stageSigRegistry(spark, d, m)
-        buildServeIndex(spark, d, m)
-        buildPqIndex(spark, d)
-        buildIvfPqIndex(spark, d, m)
-        buildBqIndex(spark, d)
-        buildIvfBqIndex(spark, d, m)
-      }
-    } else if (sf100Mode) {
-      // the third-decade staging: sf10 artifacts built normally (they
-      // are both the comparison point and the inflation source), sf100
-      // artifacts inflated/encoded — never a 5M-vector × 64k-centroid
-      // assignment (see buildSf100's header). `sf100 reuse` skips the
-      // ~30-min staging when this machine's /tmp already holds the
-      // artifacts from a prior sf100 run in this round — probe-only
-      // re-pricing after a serve-side code change.
-      val reuse = args.contains("reuse") &&
-        new java.io.File(s"$sf100Dir/embeddings.parquet").exists() &&
-        new java.io.File(s"$ivfIdxDir/sf100").exists()
-      if (reuse) println("== sf100 REUSING staged artifacts on /tmp")
-      else {
+    sweep.mode match {
+      case "sf10" =>
+        // stage what the sf10 probe set reads: image hashes + signature
+        // registries + the persisted serve indexes at BOTH scales (nlist
+        // grows with the corpus — 64·m, the constant-cell-size posture)
         buildSf10(spark)
-        stageSigRegistry(spark, sf10Dir, copies10)
-        buildServeIndex(spark, sf10Dir, copies10)
-        buildPqIndex(spark, sf10Dir)
-        buildBqIndex(spark, sf10Dir)
-        buildIvfBqIndex(spark, sf10Dir, copies10)
-        buildSf100(spark)
-        inflateIvfArtifact(spark, s"$ivfIdxDir/sf10", s"$ivfIdxDir/sf100",
-          "cells")
-        inflateIvfArtifact(spark, s"$ivfbqIdxDirB/sf10", s"$ivfbqIdxDirB/sf100",
-          "codes")
-        buildPqIndex(spark, sf100Dir)
-        buildBqIndex(spark, sf100Dir)
-      }
-    } else {
-      Seq(sf01, sf1Dir).foreach { d =>
-        stageIngest(spark, d)
-        stageImageHashes(spark, d)
-      }
-      Seq((sf01, 1), (sf1Dir, copies)).foreach { case (d, m) =>
-        stageSigRegistry(spark, d, m)
-        buildServeIndex(spark, d, m)
-        buildPqIndex(spark, d)
-        buildIvfPqIndex(spark, d, m)
-        buildBqIndex(spark, d)
-        buildIvfBqIndex(spark, d, m)
-        stageZorderLayout(spark, d, m)
-      }
+        Seq(Sf1, Sf10).foreach { sc =>
+          stageImageHashes(spark, sc.dir)
+          stageSigRegistry(spark, sc.dir, sc.m)
+          buildServeIndex(spark, sc.dir)
+          buildPqIndex(spark, sc.dir)
+          buildIvfPqIndex(spark, sc.dir)
+          buildBqIndex(spark, sc.dir)
+          buildIvfBqIndex(spark, sc.dir)
+        }
+      case "sf100" =>
+        // the third-decade staging: sf10 artifacts built normally (they
+        // are both the comparison point and the inflation source), sf100
+        // artifacts inflated/encoded — never a 5M-vector × 64k-centroid
+        // assignment (see buildSf100's header). `sf100 reuse` skips the
+        // ~30-min staging when this machine's /tmp already holds the
+        // artifacts from a prior sf100 run in this round — probe-only
+        // re-pricing after a serve-side code change.
+        val reuse = args.contains("reuse") &&
+          new java.io.File(s"$sf100Dir/embeddings.parquet").exists() &&
+          new java.io.File(s"$ivfIdxDir/sf100").exists()
+        if (reuse) println("== sf100 REUSING staged artifacts on /tmp")
+        else {
+          buildSf10(spark)
+          stageSigRegistry(spark, sf10Dir, copies10)
+          buildServeIndex(spark, sf10Dir)
+          buildPqIndex(spark, sf10Dir)
+          buildBqIndex(spark, sf10Dir)
+          buildIvfBqIndex(spark, sf10Dir)
+          buildSf100(spark)
+          inflateIvfArtifact(spark, s"$ivfIdxDir/sf10", s"$ivfIdxDir/sf100",
+            "cells")
+          inflateIvfArtifact(spark, s"$ivfbqIdxDirB/sf10", s"$ivfbqIdxDirB/sf100",
+            "codes")
+          buildPqIndex(spark, sf100Dir)
+          buildBqIndex(spark, sf100Dir)
+        }
+      case _ =>
+        Seq(sf01, sf1Dir).foreach { d =>
+          stageIngest(spark, d)
+          stageImageHashes(spark, d)
+        }
+        Seq(Sf01, Sf1).foreach { sc =>
+          stageSigRegistry(spark, sc.dir, sc.m)
+          buildServeIndex(spark, sc.dir)
+          buildPqIndex(spark, sc.dir)
+          buildIvfPqIndex(spark, sc.dir)
+          buildBqIndex(spark, sc.dir)
+          buildIvfBqIndex(spark, sc.dir)
+          stageZorderLayout(spark, sc.dir, sc.m)
+        }
     }
     // fixed-size reference/batch set (an eval suite does not grow with
     // the training corpus): every 10th BASE doc, both scales
@@ -1394,185 +1447,26 @@ object BenchSf1 {
       ts.minOption
     }
 
-    if (sf10Mode) {
-      // TWO CLAIMS, measured at the second decade (sf1→sf10, 100×):
-      // (a) PLATEAU — the four probes whose sf0.1→sf1 ratios were
-      // attributed to regime boundaries (sketch eviction onset, capped
-      // candidate space, fixture density) have bounded structures that
-      // stop growing once saturated, so the next 10× must price closer
-      // to linear than the first (compare BENCH_SF1.json's ratios);
-      // (b) FLAT SERVES — the persisted-index serve family and the
-      // signature-registry serve read O(probed)/O(registry-scan) volume
-      // by construction, so a 10× corpus underneath must price ~1×
-      // (nlist grows with the corpus: probed volume constant), and the
-      // banded LSH miner + leakage-free split must stay ~linear.
-      // PRODUCTION SHAPES ONLY: the one-shot sim_ivfbq (per-call
-      // O(corpus·nlist) build+serve) is deliberately NOT priced here —
-      // that per-call rebuild is exactly what the persisted family
-      // (bq_serve/ivfbq_serve, measured flat alongside) exists to
-      // amortize, and pricing the diagnostic next to the production
-      // serves read as a scale smell (r13 verdict). It stays in the
-      // sf0.1→sf1 sweep as the documented rebuild-cost diagnostic.
-      val names = Seq("image_dedup", "stream_heavyhitters",
-        "stream_distinct", "entity_resolution",
-        "ivf_serve", "pq_serve", "ivfpq_serve",
-        "bq_serve", "ivfbq_serve",
-        "sig_registry_serve", "minhash_lsh_est", "split_leakfree")
-      val byName = probes.toMap
-      val missing = names.filterNot(byName.contains)
-      require(missing.isEmpty, s"sf10 probes not found: $missing")
-      val rows = names.map { name =>
-        val run = byName(name)
-        val t1 = timeMin(name, 2)(run(sf1Dir, copies))
-        val t10 = timeMin(name, 2)(run(sf10Dir, copies10))
-        val ratio = for (a <- t1; b <- t10) yield b / a
-        val show = (o: Option[Double]) => o.fold("   FAIL")(t => f"$t%7.2f")
-        println(s"== sf10 ${name.padTo(22, ' ')} sf1 ${show(t1)} s   " +
-          s"sf10 ${show(t10)} s" + ratio.fold("")(r => f"   ratio $r%5.1fx"))
-        (name, t1, t10, ratio)
-      }
-      val num = (o: Option[Double]) => o.fold("null")(t => JsonNum.num(t, 3))
-      val qjson = rows.map { case (n, a, b, r) =>
-        s""""$n":{"sf1":${num(a)},"sf10":${num(b)},"ratio":${num(r)}}"""
-      }.mkString("{", ",", "}")
-      // ATTRIBUTION for the stream-replay walls: the stream probes' wall
-      // ratio tracks INPUT ROWS (a replay reprocesses the whole corpus by
-      // definition), while their state is measured capacity-bounded flat
-      // (STREAM_STATE.json). Rows/s at both scales makes that legible in
-      // the artifact itself: ~equal throughput across the decade = linear
-      // replay, no structural wall.
-      val streamNames = rows.collect {
-        case (n, _, _, _) if n.startsWith("stream_") => n }.toSet
-      val evRows = Seq(sf1Dir, sf10Dir).map(d =>
-        d -> spark.read.parquet(s"$d/events.parquet").count()).toMap
-      val tjson = rows.collect {
-        case (n, Some(a), Some(b), _) if streamNames(n) =>
-          val r1 = evRows(sf1Dir) / a
-          val r10 = evRows(sf10Dir) / b
-          s""""$n":{"sf1_rows_per_sec":${JsonNum.num(r1, 0)},""" +
-            s""""sf10_rows_per_sec":${JsonNum.num(r10, 0)}}"""
-      }.mkString("{", ",", "}")
-      val json =
-        s"""{"metric":"sf10_scale_ratio","unit":"x","copies":$copies10,""" +
-        s""""queries":$qjson,""" +
-        s""""stream_throughput":$tjson,""" +
-        s""""failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""codegen_errors":${CodegenErrors.total}}"""
-      Files.writeString(Paths.get("BENCH_SF10.json"), json + "\n")
-      spark.stop()
-      println(json)
-      if (failures.nonEmpty) sys.exit(1)
-      return
+    val byName = probes.toMap
+    val names = if (sweep.names.isEmpty) probes.map(_._1) else sweep.names
+    val missing = names.filterNot(byName.contains)
+    require(missing.isEmpty, s"${sweep.mode} probes not found: $missing")
+    val show = (o: Option[Double]) => o.fold("   FAIL")(t => f"$t%7.2f")
+    val rows = names.map { name =>
+      val t = Timing(name, sweep.scales.map(sc => timeMin(name, 2)(byName(name)(sc.dir, sc.m))))
+      println(s"== ${if (sweep.mode.isEmpty) "" else sweep.mode + " "}${name.padTo(22, ' ')} " +
+        sweep.scales.zip(t.secs).map { case (sc, s) => s"${sc.label} ${show(s)} s" }
+          .mkString("   ") +
+        t.ratio.fold("")(r => f"   ratio $r%5.1fx"))
+      t
     }
-
-    if (sf100Mode) {
-      // THE THIRD DECADE (sf10 → sf100, 1000×), artifact-synthesized:
-      // the serve family reads O(probed cells)/O(compact codes) from
-      // 10×-inflated persisted artifacts (nlist 6400 → 64000, constant
-      // cell size), the registry serve scans a 10× decorrelated
-      // signature table, and the stream probes replay the SAME 10M
-      // input rows drawn from the 100×-user population — rows/s
-      // isolates per-row cost at third-decade key cardinality. The
-      // scan-floor serves (pq/bq) are linear in codes BY DESIGN and
-      // are expected to show it; the probed serves must stay near-flat.
-      val names = Seq("ivf_serve", "pq_serve", "bq_serve", "ivfbq_serve",
-        "sig_registry_serve", "stream_heavyhitters", "stream_distinct")
-      val byName = probes.toMap
-      val missing = names.filterNot(byName.contains)
-      require(missing.isEmpty, s"sf100 probes not found: $missing")
-      val rows = names.map { name =>
-        val run = byName(name)
-        val t10 = timeMin(name, 2)(run(sf10Dir, copies10))
-        val t100 = timeMin(name, 2)(run(sf100Dir, copies100))
-        val ratio = for (a <- t10; b <- t100) yield b / a
-        val show = (o: Option[Double]) => o.fold("   FAIL")(t => f"$t%7.2f")
-        println(s"== sf100 ${name.padTo(22, ' ')} sf10 ${show(t10)} s   " +
-          s"sf100 ${show(t100)} s" + ratio.fold("")(r => f"   ratio $r%5.1fx"))
-        (name, t10, t100, ratio)
-      }
-      val num = (o: Option[Double]) => o.fold("null")(t => JsonNum.num(t, 3))
-      val qjson = rows.map { case (n, a, b, r) =>
-        s""""$n":{"sf10":${num(a)},"sf100":${num(b)},"ratio":${num(r)}}"""
-      }.mkString("{", ",", "}")
-      val streamNames = rows.collect {
-        case (n, _, _, _) if n.startsWith("stream_") => n }.toSet
-      val evRows = Seq(sf10Dir, sf100Dir).map(d =>
-        d -> spark.read.parquet(s"$d/events.parquet").count()).toMap
-      val tjson = rows.collect {
-        case (n, Some(a), Some(b), _) if streamNames(n) =>
-          val r10 = evRows(sf10Dir) / a
-          val r100 = evRows(sf100Dir) / b
-          s""""$n":{"sf10_rows_per_sec":${JsonNum.num(r10, 0)},""" +
-            s""""sf100_rows_per_sec":${JsonNum.num(r100, 0)}}"""
-      }.mkString("{", ",", "}")
-      val json =
-        s"""{"metric":"sf100_scale_ratio","unit":"x","copies":$copies100,""" +
-        s""""synthesized_artifacts":true,""" +
-        s""""events_slice_rows":${evRows(sf100Dir)},""" +
-        s""""queries":$qjson,""" +
-        s""""stream_throughput":$tjson,""" +
-        s""""failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""codegen_errors":${CodegenErrors.total}}"""
-      Files.writeString(Paths.get("BENCH_SF100.json"), json + "\n")
-      spark.stop()
-      println(json)
-      if (failures.nonEmpty) sys.exit(1)
-      return
-    }
-
-    if (smallHeap) {
-      val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-      val sel = probes.filter(p => smallHeapProbes(p._1))
-      val missing = smallHeapProbes -- probes.map(_._1).toSet
-      require(missing.isEmpty, s"small-heap probes not found: $missing")
-      val rows = sel.map { case (name, run) =>
-        val t = timeMin(name, 2)(run(sf1Dir, copies))
-        println(s"== smallheap ${name.padTo(22, ' ')} " +
-          t.fold("FAIL")(v => f"$v%7.2f s"))
-        (name, t)
-      }
-      val num = (o: Option[Double]) => o.fold("null")(t => JsonNum.num(t, 3))
-      val qjson = rows.map { case (n, t) => s""""$n":${num(t)}""" }
-        .mkString("{", ",", "}")
-      val json =
-        s"""{"metric":"smallheap_sf1_seconds","heap_mb":$heapMb,""" +
-        s""""cpus":$cpus,"shuffle_partitions":64,"copies":$copies,""" +
-        s""""queries":$qjson,""" +
-        s""""failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""codegen_errors":${CodegenErrors.total}}"""
-      Files.writeString(Paths.get("BENCH_SMALLHEAP.json"), json + "\n")
-      spark.stop()
-      println(json)
-      if (failures.nonEmpty) sys.exit(1)
-      return
-    }
-
-    val rows = probes.map { case (name, run) =>
-      val t01 = timeMin(name, 2)(run(sf01, 1))
-      val t1 = timeMin(name, 2)(run(sf1Dir, copies))
-      val ratio = for (a <- t01; b <- t1) yield b / a
-      val show = (o: Option[Double]) => o.fold("   FAIL")(t => f"$t%7.2f")
-      println(s"== ${name.padTo(22, ' ')} sf0.1 ${show(t01)} s   sf1 ${show(t1)} s" +
-        ratio.fold("")(r => f"   ratio $r%5.1fx"))
-      (name, t01, t1, ratio)
-    }
-    // a probe that cannot be priced at either scale fails the gate loudly
-    val superlinear = rows.collect {
-      case (n, _, _, Some(r)) if r > 12.0 => n
-      case (n, a, b, _) if a.isEmpty || b.isEmpty => n
-    }
-    val num = (o: Option[Double]) => o.fold("null")(t => JsonNum.num(t, 3))
-    val qjson = rows.map { case (n, a, b, r) =>
-      s""""$n":{"sf01":${num(a)},"sf1":${num(b)},"ratio":${num(r)}}"""
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"sf1_scale_ratio","unit":"x","copies":$copies,""" +
-      s""""queries":$qjson,""" +
-      s""""superlinear":${superlinear.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""failures":${failures.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""codegen_errors":${CodegenErrors.total}}"""
-    Files.writeString(Paths.get("BENCH_SF1.json"), json + "\n")
+    val eventRows =
+      if (!sweep.throughput) Nil
+      else sweep.scales.map(sc => spark.read.parquet(s"${sc.dir}/events.parquet").count())
+    val json = report(sweep, rows, heapMb, cpus, eventRows, failures.toSeq, CodegenErrors.total)
+    Files.writeString(Paths.get(sweep.artifact), json + "\n")
     spark.stop()
     println(json)
+    if (sweep.exitOnFailure && failures.nonEmpty) sys.exit(1)
   }
 }

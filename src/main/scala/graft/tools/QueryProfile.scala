@@ -10,6 +10,7 @@ import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 /** The program's one work profiler: a listener that credits every Spark
   * job, and every stage that job runs, to the label the submitting thread
@@ -19,9 +20,9 @@ import org.apache.spark.sql.SparkSession
   * started without a label are credited to [[QueryProfile.Unlabelled]].
   *
   * It keeps one [[QueryProfile.Stage]] record per completed stage attempt
-  * (call site, tasks, records in and out, shuffle bytes written, executor
-  * run and CPU time), and a label's [[QueryProfile.Work]] is the sum of its
-  * records plus its job count. Delivery is asynchronous: read after
+  * (SQL execution id, call site, tasks, records in and out, shuffle bytes
+  * written, executor run and CPU time), and a label's [[QueryProfile.Work]]
+  * is the sum of its records plus its job count. Delivery is asynchronous: read after
   * [[org.apache.spark.ListenerBusDrain]], which [[QueryProfile.labelled]]
   * runs before it returns.
   */
@@ -29,7 +30,7 @@ class QueryProfile extends SparkListener {
   import QueryProfile._
 
   private val jobs = new ConcurrentHashMap[String, AtomicLong]
-  private val running = new ConcurrentHashMap[(Int, Int), String]
+  private val running = new ConcurrentHashMap[(Int, Int), (String, String)]
   private val done = new ConcurrentLinkedQueue[Stage]
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -38,16 +39,19 @@ class QueryProfile extends SparkListener {
   }
 
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-    running.put((e.stageInfo.stageId, e.stageInfo.attemptNumber()), labelOf(e.properties))
+    val executionId = Option(e.properties)
+      .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).getOrElse("")
+    running.put((e.stageInfo.stageId, e.stageInfo.attemptNumber()),
+      (labelOf(e.properties), executionId))
     ()
   }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val info = e.stageInfo
-    val label = Option(running.remove((info.stageId, info.attemptNumber())))
-      .getOrElse(Unlabelled)
+    val (label, executionId) = Option(running.remove((info.stageId, info.attemptNumber())))
+      .getOrElse((Unlabelled, ""))
     val m = info.taskMetrics
-    val s = Stage(info.stageId, label, info.name.takeWhile(_ != '\n'), info.numTasks,
+    val s = Stage(info.stageId, label, executionId, info.name.takeWhile(_ != '\n'), info.numTasks,
       m.inputMetrics.recordsRead, m.inputMetrics.bytesRead, m.shuffleReadMetrics.recordsRead,
       m.outputMetrics.recordsWritten, m.shuffleWriteMetrics.recordsWritten,
       m.shuffleWriteMetrics.bytesWritten, m.executorRunTime, m.executorCpuTime)
@@ -79,11 +83,13 @@ object QueryProfile {
     */
   final case class Work(jobs: Long, stages: Int, shuffleBytes: Long, runMs: Long, cpuNs: Long)
 
-  /** One completed stage attempt. `input*` is what it read from storage,
-    * `output*` what it wrote to storage, `shuffle*` what it read from and
-    * wrote to the shuffle.
+  /** One completed stage attempt. `executionId` is the SQL execution that
+    * submitted it (`spark.sql.execution.id`, empty for jobs outside one),
+    * which ties a stage adaptive execution submits to its query. `input*`
+    * is what it read from storage, `output*` what it wrote to storage,
+    * `shuffle*` what it read from and wrote to the shuffle.
     */
-  final case class Stage(id: Int, label: String, callSite: String, tasks: Int,
+  final case class Stage(id: Int, label: String, executionId: String, callSite: String, tasks: Int,
                          inputRecords: Long, inputBytes: Long, shuffleReadRecords: Long,
                          outputRecords: Long, shuffleWriteRecords: Long, shuffleBytes: Long,
                          runMs: Long, cpuNs: Long) {

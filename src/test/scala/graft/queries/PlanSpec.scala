@@ -355,8 +355,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val df = spark.range(1000).select(col("id").as("k"), rand(7).as("v"))
     val id = HostedTables.createTable(df, "planspec_tbl", Some("k"))
       .fold(e => fail(e), identity)
-    HostedTables.write(df, id, WriteMode.Upsert, Some("k")).fold(e => fail(e), identity)
-    val report = graft.sources.GraftWriteReports.last(id)
+    val report = HostedTables.write(df, id, WriteMode.Upsert, Some("k")).fold(e => fail(e), identity)
     val ranges = report.filter(_.rows > 0).map(m => (m.minKey.toLong, m.maxKey.toLong))
       .sortBy(_._1)
     ranges.sliding(2).foreach {

@@ -200,9 +200,9 @@ class GraftConnectorSpec extends AnyFunSuite {
     val df = spark.range(95, 105).select($"id".as("k"), lit("x").as("v"))
     val id = HostedTables.createTable(df, "audit_range_tbl", Some("k"))
       .fold(e => fail(e), identity)
-    HostedTables.write(df.coalesce(1), id, graft.core.WriteMode.Upsert, Some("k"))
+    val report = HostedTables.write(df.coalesce(1), id, graft.core.WriteMode.Upsert, Some("k"))
       .fold(e => fail(e), identity)
-    val m = graft.sources.GraftWriteReports.last(id).find(_.rows > 0).get
+    val m = report.find(_.rows > 0).get
     assert(m.minKey == "95", m.toString) // lexicographic would say "100"
     assert(m.maxKey == "104", m.toString)
   }

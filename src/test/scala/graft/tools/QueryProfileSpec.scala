@@ -75,4 +75,16 @@ class QueryProfileSpec extends AnyFunSuite {
       assert(p.work("profile.last").jobs == 1)
     }
   }
+
+  test("every stage of one adaptive count() carries the same SQL execution id") {
+    withProfile { p =>
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      QueryProfile.labelled(spark.sparkContext, "profile.sql") {
+        spark.range(0, 20000, 1, 4).groupBy(col("id") % 13).count().count()
+      }
+      val ids = p.stagesOf("profile.sql").map(_.executionId)
+      assert(ids.size >= 2, ids)
+      assert(ids.distinct.size == 1 && ids.head.nonEmpty, ids)
+    }
+  }
 }
