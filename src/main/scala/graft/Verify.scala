@@ -21,6 +21,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    graft.queries.Staging.keepUnder(s"${outDir.stripSuffix("/")}_staging")
     val spark = LocalSession("WARN")
     // The rows-only invariant, enforced at the correctness gate itself:
     // a new query missing its oracle (or a typo'd oracle key) must fail

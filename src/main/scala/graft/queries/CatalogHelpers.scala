@@ -10,6 +10,37 @@ import graft.operators.{Calibration, Cdc, Curation, Dedup, Embeddings, GraphOps,
 import graft.sinks.HostedStore
 import graft.streaming.EventStreams
 
+/** Root of every fixture, persisted index and export the query catalog
+  * stages on disk. Two runs on one host (a `Verify` beside a test run)
+  * used to share fixed `/tmp/graft_*` paths and overwrite each other's
+  * inputs mid-query; now each JVM stages under its own root.
+  */
+private[graft] object Staging {
+  private var chosen: java.nio.file.Path = _
+
+  /** The root: by default a fresh temporary directory, removed
+    * recursively when the JVM exits.
+    */
+  def root: java.nio.file.Path = synchronized {
+    if (chosen == null) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_staging_")
+      sys.addShutdownHook(graft.core.ParquetStage.rmRec(dir.toString))
+      chosen = dir
+    }
+    chosen
+  }
+
+  /** Stage under `dir` instead, emptied first and kept after exit:
+    * `Verify` writes oracle SQL that replays over persisted index tables
+    * once this JVM is gone. Must run before the catalog is first touched.
+    */
+  def keepUnder(dir: String): Unit = synchronized {
+    require(chosen == null, s"staging root already chosen: $chosen")
+    graft.core.ParquetStage.rmRec(dir)
+    chosen = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+  }
+}
+
 /** Shared fixtures, staging memos, and SQL-fragment builders of the query
   * catalog — everything the per-family part files under `catalog/` lean
   * on. Split out of the former 9.5k-line QueryCatalog.scala (r12);
@@ -18,6 +49,9 @@ import graft.streaming.EventStreams
 private[graft] object CatalogHelpers {
 
   type Q = (SparkSession, String) => DataFrame
+
+  /** `name` under [[Staging.root]]. */
+  def stagingPath(name: String): String = Staging.root.resolve(name).toString
 
 
 
@@ -732,7 +766,7 @@ private[graft] object CatalogHelpers {
     * `score` values are exact quarters and `created` is minute-granular, so
     * both engines parse identical doubles/timestamps from the text.
     */
-  val csvStagePath = "/tmp/graft_csv_stage.csv"
+  val csvStagePath = stagingPath("csv_stage.csv")
   def writeCsvStageFixture(s: SparkSession, dir: String): String = synchronized {
     val rows = t(s, dir, "documents")
       .select("doc_id", "lang", "source", "n_chars")
@@ -766,7 +800,7 @@ private[graft] object CatalogHelpers {
     * staging fixture above; the engine work under test is the
     * schema-driven distributed parse + corrupt-record routing.
     */
-  val jsonlStagePath = "/tmp/graft_jsonl_stage.jsonl"
+  val jsonlStagePath = stagingPath("jsonl_stage.jsonl")
   def writeJsonlStageFixture(s: SparkSession, dir: String): String = synchronized {
     val rows = t(s, dir, "documents")
       .select("doc_id", "lang", "source", "n_chars", "text")
@@ -815,25 +849,25 @@ private[graft] object CatalogHelpers {
     * persistence). Keyed by dir so a JVM that switches scale factors
     * rebuilds; overwrite-mode writes make the rebuild safe.
     */
-  val ivfIdxDir = "/tmp/graft_ivf_idx"
-  val ivfAppIdxDir = "/tmp/graft_ivf_idx_app"
-  val ivfCompactIdxDir = "/tmp/graft_ivf_idx_compact"
-  val fragInDir = "/tmp/graft_frag_in"
-  val fragOutDir = "/tmp/graft_frag_out"
-  val ivfDelIdxDir = "/tmp/graft_ivf_idx_del"
-  val pqIdxDir = "/tmp/graft_pq_idx"
-  val ivfpqIdxDir = "/tmp/graft_ivfpq_idx"
-  val ivfpqDelIdxDir = "/tmp/graft_ivfpq_idx_del"
-  val ivfpqAppIdxDir = "/tmp/graft_ivfpq_idx_app"
-  val ivfpqSyncIdxDir = "/tmp/graft_ivfpq_idx_cdcsync"
-  val ivfpqResIdxDir = "/tmp/graft_ivfpq_idx_res"
-  val bpeIdxDir = "/tmp/graft_bpe_idx"
-  val nbIdxDir = "/tmp/graft_nb_idx"
-  val calIdxDir = "/tmp/graft_cal_idx"
-  val sigIdxDir = "/tmp/graft_sig_idx"
-  val sigLifeDir = "/tmp/graft_sig_life"
-  val bqIdxDir = "/tmp/graft_bq_idx"
-  val ivfbqIdxDir = "/tmp/graft_ivfbq_idx"
+  val ivfIdxDir = stagingPath("ivf_idx")
+  val ivfAppIdxDir = stagingPath("ivf_idx_app")
+  val ivfCompactIdxDir = stagingPath("ivf_idx_compact")
+  val fragInDir = stagingPath("frag_in")
+  val fragOutDir = stagingPath("frag_out")
+  val ivfDelIdxDir = stagingPath("ivf_idx_del")
+  val pqIdxDir = stagingPath("pq_idx")
+  val ivfpqIdxDir = stagingPath("ivfpq_idx")
+  val ivfpqDelIdxDir = stagingPath("ivfpq_idx_del")
+  val ivfpqAppIdxDir = stagingPath("ivfpq_idx_app")
+  val ivfpqSyncIdxDir = stagingPath("ivfpq_idx_cdcsync")
+  val ivfpqResIdxDir = stagingPath("ivfpq_idx_res")
+  val bpeIdxDir = stagingPath("bpe_idx")
+  val nbIdxDir = stagingPath("nb_idx")
+  val calIdxDir = stagingPath("cal_idx")
+  val sigIdxDir = stagingPath("sig_idx")
+  val sigLifeDir = stagingPath("sig_life")
+  val bqIdxDir = stagingPath("bq_idx")
+  val ivfbqIdxDir = stagingPath("ivfbq_idx")
 
   /** Replay over a persisted BQ code table: member signatures from the
     * parquet the build/maintenance wrote (the one artifact the serve
@@ -935,8 +969,8 @@ private[graft] object CatalogHelpers {
        |  FROM exact) WHERE rank <= 10
        |ORDER BY qid, rank""".stripMargin
 
-  val bqSyncIdxDir = "/tmp/graft_bq_idx_cdcsync"
-  val ivfbqSyncIdxDir = "/tmp/graft_ivfbq_idx_cdcsync"
+  val bqSyncIdxDir = stagingPath("bq_idx_cdcsync")
+  val ivfbqSyncIdxDir = stagingPath("ivfbq_idx_cdcsync")
 
   /** The POST-TAIL snapshot CTE the BQ sync replays re-rank against —
     * the same update/delete/revive tail shape as x_cdc_pq_sync, with
@@ -977,7 +1011,7 @@ private[graft] object CatalogHelpers {
         docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 20 === 1)
           .select("doc_id"), sigLifeDir)
     }
-  val sigCmpDir = "/tmp/graft_sig_life_cmp"
+  val sigCmpDir = stagingPath("sig_life_cmp")
 
   /** The registry lifecycle fixture COMPACTED BY THE POLICY ACTOR: same
     * base + appended slices + tombstone sidecar as
@@ -1004,21 +1038,21 @@ private[graft] object CatalogHelpers {
         maxFiles = 1000000, maxTombstoneFracPct = 1)
       require(fired, "stagedSigCompacted: the compaction policy did not fire")
     }
-  val unigramIdxDir = "/tmp/graft_unigram_idx"
-  val wordpieceIdxDir = "/tmp/graft_wordpiece_idx"
-  val sq8IdxDir = "/tmp/graft_sq8_idx"
-  val binIngestDir = "/tmp/graft_bin_ingest"
-  val takedownIdxDir = "/tmp/graft_ivf_idx_cdc"
-  val pqAppIdxDir = "/tmp/graft_pq_idx_app"
-  val pqDelIdxDir = "/tmp/graft_pq_idx_del"
-  val ivfDelCmpIdxDir = "/tmp/graft_ivf_idx_delcmp"
-  val pqDelCmpIdxDir = "/tmp/graft_pq_idx_delcmp"
-  val cdcCheckpointDir = "/tmp/graft_cdc_checkpoint"
-  val cdcSyncIdxDir = "/tmp/graft_ivf_idx_cdcsync"
-  val pqSyncIdxDir = "/tmp/graft_pq_idx_cdcsync"
-  val pruneStatsDir = "/tmp/graft_zorder_layout"
-  val spatialLayoutDir = "/tmp/graft_spatial_layout"
-  val spatialZreadDir = "/tmp/graft_spatial_zread"
+  val unigramIdxDir = stagingPath("unigram_idx")
+  val wordpieceIdxDir = stagingPath("wordpiece_idx")
+  val sq8IdxDir = stagingPath("sq8_idx")
+  val binIngestDir = stagingPath("bin_ingest")
+  val takedownIdxDir = stagingPath("ivf_idx_cdc")
+  val pqAppIdxDir = stagingPath("pq_idx_app")
+  val pqDelIdxDir = stagingPath("pq_idx_del")
+  val ivfDelCmpIdxDir = stagingPath("ivf_idx_delcmp")
+  val pqDelCmpIdxDir = stagingPath("pq_idx_delcmp")
+  val cdcCheckpointDir = stagingPath("cdc_checkpoint")
+  val cdcSyncIdxDir = stagingPath("ivf_idx_cdcsync")
+  val pqSyncIdxDir = stagingPath("pq_idx_cdcsync")
+  val pruneStatsDir = stagingPath("zorder_layout")
+  val spatialLayoutDir = stagingPath("spatial_layout")
+  val spatialZreadDir = stagingPath("spatial_zread")
 
   /** The 8-word re-lining shared by the line-dedup batch entry, its
     * streaming twin, and their common oracle (the fixture's documents
@@ -1029,8 +1063,8 @@ private[graft] object CatalogHelpers {
       "sequence(0, (size(split(text, ' ')) - 1) DIV 8)," +
       " i -> array_join(slice(split(text, ' '), i * 8 + 1, 8), ' '))," +
       " '\\n')")
-  val streamTdIdxDir = "/tmp/graft_ivf_idx_streamtd"
-  val streamTdStageDir = "/tmp/graft_streamtd_log"
+  val streamTdIdxDir = stagingPath("ivf_idx_streamtd")
+  val streamTdStageDir = stagingPath("streamtd_log")
   val builtIndexes = scala.collection.mutable.Map[String, String]()
   /** Stage the quality-gate model artifacts (NB token weights + isotonic
     * calibration table) once per (JVM, sf-dir) — shared by the serve,
@@ -1078,7 +1112,7 @@ private[graft] object CatalogHelpers {
     * BIGINT `score` column. Each era lands as ONE plain parquet file so
     * the oracle can address the identical files by path.
     */
-  val evoDir = "/tmp/graft_evo"
+  val evoDir = stagingPath("evo")
   def writeEvolutionFixture(s: SparkSession, dir: String): (String, String) = synchronized {
     val docs = t(s, dir, "documents").select("doc_id", "lang", "n_chars")
     val v1 = graft.core.ParquetStage.stageSingleFile(
@@ -1108,7 +1142,7 @@ private[graft] object CatalogHelpers {
     * scale the signature table is a first-class persisted artifact,
     * exactly like the ANN index.
     */
-  val imgHashStageDir = "/tmp/graft_imghash_stage"
+  val imgHashStageDir = stagingPath("imghash_stage")
   def stageImageHashes(s: SparkSession, dir: String): String = {
     stageIndex(imgHashStageDir, dir) {
       val docs = t(s, dir, "documents").select("doc_id", "text")
@@ -1150,7 +1184,7 @@ private[graft] object CatalogHelpers {
     * twin of [[stageImageHashes]]: doubled corpus → real WAV encode →
     * 64-bit energy-delta fingerprint, one parquet per (JVM, sf-dir).
     */
-  val audioPrintStageDir = "/tmp/graft_audioprint_stage"
+  val audioPrintStageDir = stagingPath("audioprint_stage")
   def stageAudioPrints(s: SparkSession, dir: String): String = {
     stageIndex(audioPrintStageDir, dir) {
       val docs = t(s, dir, "documents").select("doc_id", "text")

@@ -289,7 +289,7 @@ private[queries] object ExtensionQueriesA {
       // table instead — which is exactly what makes this a LOSSLESS
       // round-trip check: any value damaged in the ORC write/read path
       // hash-mismatches.
-      val orcDir = "/tmp/graft_orc_stage"
+      val orcDir = stagingPath("orc_stage")
       t(s, dir, "documents").write.mode("overwrite").orc(orcDir)
       s.read.orc(orcDir)
         .groupBy(col("lang"))
@@ -336,7 +336,7 @@ private[queries] object ExtensionQueriesA {
       // (LateDataSpec).
       try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       catch { case _: Exception => () }
-      graft.streaming.LateData.runOnce(s, dir)
+      graft.streaming.LateData.runOnce(s, dir, stagingPath("latedata"))
     }),
 
     "x_stream_quantiles" -> ((s, dir) => {
@@ -773,7 +773,7 @@ private[queries] object ExtensionQueriesA {
       catch { case _: Exception => () }
       val log = cdcLog(s, dir)
       val stage =
-        s"/tmp/graft_stream_cdc/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+        stagingPath(s"stream_cdc/${dir.replaceAll("[^A-Za-z0-9]", "_")}")
       graft.streaming.StreamCdc.stageLogSlices(log, "seq", stage,
         (1L to 4L).map(Seq(_)))
       graft.streaming.StreamCdc.runOnce(s, stage, log.schema,
@@ -958,7 +958,7 @@ private[queries] object ExtensionQueriesA {
         lit(",\"lang\":\""), col("lang"), lit("\",\"source\":\""),
         col("source"), lit("\",\"text\":\""), esc, lit("\"}"))
       Curation.exportJsonl(docs.select(col("doc_id"), line.as("line")),
-          "doc_id", "line", "/tmp/graft_export_jsonl", numShards = 8)
+          "doc_id", "line", stagingPath("export_jsonl"), numShards = 8)
         .select("shard_no", "n_rows", "byte_len", "sha256")
         .orderBy("shard_no")
     }),

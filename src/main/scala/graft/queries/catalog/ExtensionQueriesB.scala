@@ -781,7 +781,7 @@ private[queries] object ExtensionQueriesB {
       // the report's sha256 column is a binary artifact, pinned instead
       // by NpySpec's cross-partitioning determinism test.
       graft.operators.Embeddings.exportNpy(t(s, dir, "embeddings"),
-          "vec_id", "embedding", "/tmp/graft_npy_export", numShards = 8)
+          "vec_id", "embedding", stagingPath("npy_export"), numShards = 8)
         .select("shard_no", "n_rows", "n_dim", "byte_len")
         .orderBy("shard_no")),
 
@@ -791,7 +791,7 @@ private[queries] object ExtensionQueriesB {
       // md5-shard determinism contract as x_export_npy, u8 header math
       // in the oracle (payload n·dim·1).
       graft.operators.Embeddings.exportNpyQuantized(t(s, dir, "embeddings"),
-          "vec_id", "embedding", "/tmp/graft_npy_export_u8", numShards = 8)
+          "vec_id", "embedding", stagingPath("npy_export_u8"), numShards = 8)
         .select("shard_no", "n_rows", "n_dim", "byte_len")
         .orderBy("shard_no")),
 

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, ShortType, StringType, StructType}
 
 import graft.core.WriteMode
 
@@ -30,7 +31,10 @@ import graft.core.WriteMode
   * `outFields`, limit → `resultRecordCount`) is intentionally implemented
   * *here*, not in the Spark reader: it models the pushdown the remote API
   * supports, so the connector's `.explain` shows which predicates left the
-  * Spark plan.
+  * Spark plan. Where a real service answers `where` from its indexes, the
+  * store scans: [[FilterEval.compile]] turns the filters into one row
+  * predicate per query, and one filtered pass serves the count and all
+  * pages.
   *
   * It is the in-process [[HostedTableSink]] and the default of
   * [[HostedSinks.active]].
@@ -423,7 +427,7 @@ object HostedStore extends HostedTableSink {
       val hit = filteredCache.synchronized(filteredCache.get(key))
       if (hit != null) hit
       else {
-        val v = t.rows.filter(r => filters.forall(f => FilterEval(f, r, t.schema)))
+        val v = t.rows.filter(FilterEval.compile(filters.toSeq, t.schema))
         filteredCache.synchronized {
           // version-at-put check: a writer may have rotated the table
           // while this pass ran outside the lock — inserting the stale
@@ -454,10 +458,10 @@ object HostedStore extends HostedTableSink {
       filters: Array[Filter]): Iterator[Row] = {
     val t = get(itemId)
     val filtered = filteredRows(t, filters)
-    val idx = requiredCols.map(c => t.schema.fieldIndex(c))
-    filtered.iterator
-      .slice(offset.toInt, (offset + count).toInt)
-      .map(r => Row.fromSeq(idx.toIndexedSeq.map(r.get)))
+    val idx = requiredCols.toIndexedSeq.map(c => t.schema.fieldIndex(c))
+    val page = filtered.iterator.slice(offset.toInt, (offset + count).toInt)
+    if (idx == t.schema.indices) page
+    else page.map(r => Row.fromSeq(idx.map(r.get)))
   }
 
   /** Count of rows matching the filters (the remote `returnCountOnly`),
@@ -484,7 +488,9 @@ object HostedStore extends HostedTableSink {
                         specs: Seq[(String, Option[String])]): Seq[Row] = {
     val t = get(itemId)
     val gIdx = groupFields.map(t.schema.fieldIndex)
-    val matching = t.rows.filter(r => filters.forall(f => FilterEval(f, r, t.schema)))
+    val matching =
+      if (t.rows.isEmpty) t.rows
+      else t.rows.filter(FilterEval.compile(filters.toSeq, t.schema))
     matching.groupBy(r => gIdx.map(r.get)).toSeq.map { case (keyVals, rows) =>
       val stats = specs.map {
         case ("count", _) => rows.size.toLong
@@ -509,10 +515,12 @@ object HostedStore extends HostedTableSink {
                   isMin: Boolean): Any = {
     val t = get(itemId)
     val idx = t.schema.fieldIndex(field)
-    val matching = t.rows.iterator
-      .filter(r => filters.forall(f => FilterEval(f, r, t.schema)))
-      .map(_.get(idx))
-      .filter(_ != null)
+    val matching =
+      if (t.rows.isEmpty) Iterator.empty
+      else t.rows.iterator
+        .filter(FilterEval.compile(filters.toSeq, t.schema))
+        .map(_.get(idx))
+        .filter(_ != null)
     if (!matching.hasNext) null
     else matching.reduce { (a, b) =>
       val c = FilterEval.cmpValues(a, b)
@@ -771,6 +779,11 @@ object HostedStore extends HostedTableSink {
   * what lets a bounding-box predicate on the point-geometry convention
   * evaluate service-side — the relational analog of the remote envelope
   * (`geometryEnvelope`) query.
+  *
+  * A real service evaluates `where` through its own indexes; this double
+  * scans. It compiles the filters once per query ([[compile]]) and the
+  * store shares that one pass between the count and every page of a
+  * scan (see `HostedStore.filteredRows`).
   */
 object FilterEval {
 
@@ -843,17 +856,29 @@ object FilterEval {
       case _                                          => true
     }
 
-  /** Row value at a (possibly nested) path; a null anywhere along the
-    * path yields null, matching SQL's null-propagating field access.
+  /** The field indexes along a (possibly nested) attribute path, and the
+    * type at its end.
     */
-  private def resolve(attr: String, r: Row, schema: StructType): Any = {
-    var cur: Any = r
-    var t: org.apache.spark.sql.types.DataType = schema
-    parsePath(attr).foreach { seg =>
+  private def indexPath(attr: String, schema: StructType): (Array[Int], DataType) = {
+    var t: DataType = schema
+    val idx = parsePath(attr).map { seg =>
       val st = t.asInstanceOf[StructType]
       val i = st.fieldIndex(seg)
       t = st(i).dataType
-      cur = if (cur == null) null else cur.asInstanceOf[Row].get(i)
+      i
+    }.toArray
+    (idx, t)
+  }
+
+  /** Row value at an index path; a null anywhere along the path yields
+    * null, matching SQL's null-propagating field access.
+    */
+  private def valueAt(idx: Array[Int], r: Row): Any = {
+    var cur: Any = r
+    var i = 0
+    while (cur != null && i < idx.length) {
+      cur = cur.asInstanceOf[Row].get(idx(i))
+      i += 1
     }
     cur
   }
@@ -886,31 +911,87 @@ object FilterEval {
       s"unsupported comparison: ${a.getClass} vs ${b.getClass}")
   }
 
-  /** A pushed filter keeps only rows that evaluate to definite TRUE.
-    * Evaluation is SQL THREE-valued: a null operand makes a comparison
-    * UNKNOWN, and `Not`/`And`/`Or` combine by Kleene logic. This matters
-    * because Spark removes fully-pushed DSv2 filters from its own plan —
-    * with two-valued logic a pushed `Not(x >= 2)` over a null `x` would
-    * return rows Spark's Filter operator would have dropped (NOT UNKNOWN
-    * is UNKNOWN, not TRUE), silently inflating results.
+  /** `cmpValues(_, x)` for one constant, picked from the leaf type once:
+    * a value of the leaf's own class compares against the constant
+    * normalized up front; any other value goes through [[cmpValues]],
+    * so results (and errors) are exactly those of [[cmpValues]].
     */
-  def apply(f: Filter, r: Row, schema: StructType): Boolean =
-    tri(f, r, schema) == java.lang.Boolean.TRUE
+  private trait Cmp { def apply(v: Any): Int }
+  private def cmpTo(x: Any, leaf: DataType): Cmp = (leaf, x) match {
+    case (LongType | IntegerType | ShortType | ByteType, n: Number) if isIntegral(n) =>
+      val xl = n.longValue()
+      v => v match {
+        case m: Number if isIntegral(m) => java.lang.Long.compare(m.longValue(), xl)
+        case _                          => cmpValues(v, x)
+      }
+    case (DoubleType | FloatType, n @ (_: java.lang.Double | _: java.lang.Float)) =>
+      val xd = n.asInstanceOf[Number].doubleValue()
+      v => v match {
+        case m @ (_: java.lang.Double | _: java.lang.Float) =>
+          java.lang.Double.compare(m.asInstanceOf[Number].doubleValue(), xd)
+        case _ => cmpValues(v, x)
+      }
+    case (StringType, s: String) =>
+      v => v match {
+        case m: String => m.compareTo(s)
+        case _         => cmpValues(v, x)
+      }
+    case _ => v => cmpValues(v, x)
+  }
 
-  private val TRUE = java.lang.Boolean.TRUE
-  private val FALSE = java.lang.Boolean.FALSE
+  /** Kleene truth values ordered FALSE < UNKNOWN < TRUE, so AND is the
+    * minimum, OR the maximum and NOT the mirror image.
+    */
+  private final val F = 0
+  private final val U = 1
+  private final val T = 2
 
-  /** Kleene evaluation: TRUE / FALSE / null (= UNKNOWN). */
-  private def tri(f: Filter, r: Row, schema: StructType): java.lang.Boolean = {
-    def v(attr: String): Any = resolve(attr, r, schema)
-    def cmpTri(a: String, x: Any)(p: Int => Boolean): java.lang.Boolean = {
-      val va = v(a)
-      if (va == null || x == null) null
-      else java.lang.Boolean.valueOf(p(cmpValues(va, x)))
+  /** One compiled filter: its Kleene value on a row. */
+  private trait Tri { def apply(r: Row): Int }
+
+  /** The predicate a set of pushed filters (implicitly AND-ed) stands
+    * for. A row is kept only when every filter evaluates to definite
+    * TRUE. Evaluation is SQL THREE-valued: a null operand makes a
+    * comparison UNKNOWN, and `Not`/`And`/`Or` combine by Kleene logic.
+    * This matters because Spark removes fully-pushed DSv2 filters from
+    * its own plan — with two-valued logic a pushed `Not(x >= 2)` over a
+    * null `x` would return rows Spark's Filter operator would have
+    * dropped (NOT UNKNOWN is UNKNOWN, not TRUE), silently inflating
+    * results.
+    *
+    * The per-query work happens here, once: each attribute path
+    * resolves to field indexes, each constant is normalized and its
+    * comparator picked from the leaf type, and an `In` list becomes a
+    * hash set when the leaf and every constant are integral, or all are
+    * strings. An unresolvable path or an unsupported filter fails here.
+    */
+  def compile(filters: Seq[Filter], schema: StructType): Row => Boolean = {
+    val tris = filters.map(compileTri(_, schema)).toArray
+    r => {
+      var i = 0
+      while (i < tris.length && tris(i)(r) == T) i += 1
+      i == tris.length
     }
-    def strTri(a: String)(p: String => Boolean): java.lang.Boolean = {
-      val va = v(a)
-      if (va == null) null else java.lang.Boolean.valueOf(p(va.toString))
+  }
+
+  private def compileTri(f: Filter, schema: StructType): Tri = {
+    def cmpTri(a: String, x: Any)(p: Int => Boolean): Tri = {
+      val (idx, leaf) = indexPath(a, schema)
+      if (x == null) _ => U
+      else {
+        val cmp = cmpTo(x, leaf)
+        r => {
+          val v = valueAt(idx, r)
+          if (v == null) U else if (p(cmp(v))) T else F
+        }
+      }
+    }
+    def strTri(a: String)(p: String => Boolean): Tri = {
+      val idx = indexPath(a, schema)._1
+      r => {
+        val v = valueAt(idx, r)
+        if (v == null) U else if (p(v.toString)) T else F
+      }
     }
     f match {
       case EqualTo(a, x)            => cmpTri(a, x)(_ == 0)
@@ -921,31 +1002,58 @@ object FilterEval {
       case In(a, xs) =>
         // SQL IN: TRUE on a non-null match; UNKNOWN if the probe is null
         // or the list holds a null and nothing matched; else FALSE
-        val va = v(a)
-        if (va == null) null
-        else if (xs.exists(x => x != null && cmpValues(va, x) == 0)) TRUE
-        else if (xs.contains(null)) null
-        else FALSE
-      case IsNull(a)              => java.lang.Boolean.valueOf(v(a) == null)
-      case IsNotNull(a)           => java.lang.Boolean.valueOf(v(a) != null)
+        val (idx, leaf) = indexPath(a, schema)
+        val consts = xs.filter(_ != null)
+        val miss = if (consts.length < xs.length) U else F
+        val integralLeaf = leaf match {
+          case LongType | IntegerType | ShortType | ByteType => true
+          case _                                             => false
+        }
+        val scan: Any => Boolean = {
+          val cmps = consts.map(cmpTo(_, leaf))
+          v => cmps.exists(_(v) == 0)
+        }
+        val member: Any => Boolean =
+          if (integralLeaf && consts.forall {
+                case n: Number => isIntegral(n)
+                case _         => false
+              }) {
+            val set = consts.map(_.asInstanceOf[Number].longValue()).toSet
+            v => v match {
+              case m: Number if isIntegral(m) => set.contains(m.longValue())
+              case _                          => scan(v)
+            }
+          } else if (consts.forall(_.isInstanceOf[String])) {
+            val set = consts.toSet[Any]
+            v => v match {
+              case m: String => set.contains(m)
+              case _         => scan(v)
+            }
+          } else scan
+        r => {
+          val v = valueAt(idx, r)
+          if (v == null) U else if (member(v)) T else miss
+        }
+      case IsNull(a) =>
+        val idx = indexPath(a, schema)._1
+        r => if (valueAt(idx, r) == null) T else F
+      case IsNotNull(a) =>
+        val idx = indexPath(a, schema)._1
+        r => if (valueAt(idx, r) != null) T else F
       case StringStartsWith(a, p) => strTri(a)(_.startsWith(p))
       case StringEndsWith(a, p)   => strTri(a)(_.endsWith(p))
       case StringContains(a, p)   => strTri(a)(_.contains(p))
       case And(l, rr) =>
-        val a = tri(l, r, schema)
-        val b = tri(rr, r, schema)
-        if (a == FALSE || b == FALSE) FALSE
-        else if (a == null || b == null) null
-        else TRUE
+        val a = compileTri(l, schema)
+        val b = compileTri(rr, schema)
+        r => math.min(a(r), b(r))
       case Or(l, rr) =>
-        val a = tri(l, r, schema)
-        val b = tri(rr, r, schema)
-        if (a == TRUE || b == TRUE) TRUE
-        else if (a == null || b == null) null
-        else FALSE
+        val a = compileTri(l, schema)
+        val b = compileTri(rr, schema)
+        r => math.max(a(r), b(r))
       case Not(c) =>
-        val a = tri(c, r, schema)
-        if (a == null) null else java.lang.Boolean.valueOf(!a.booleanValue())
+        val a = compileTri(c, schema)
+        r => T - a(r)
       case _ => throw new IllegalArgumentException(s"unsupported filter $f")
     }
   }

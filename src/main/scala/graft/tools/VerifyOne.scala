@@ -15,6 +15,7 @@ object VerifyOne {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "/tmp/verify_one"
+    graft.queries.Staging.keepUnder(s"${outDir.stripSuffix("/")}_staging")
     val spark = LocalSession("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
