@@ -7,8 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
-  IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.WriteMode
 
@@ -459,9 +458,8 @@ object HostedStore extends HostedTableSink {
     val t = get(itemId)
     val filtered = filteredRows(t, filters)
     val idx = requiredCols.toIndexedSeq.map(c => t.schema.fieldIndex(c))
-    val page = filtered.iterator.slice(offset.toInt, (offset + count).toInt)
-    if (idx == t.schema.indices) page
-    else page.map(r => Row.fromSeq(idx.map(r.get)))
+    filtered.iterator.slice(offset.toInt, (offset + count).toInt)
+      .map(r => Row.fromSeq(idx.map(r.get)))
   }
 
   /** Count of rows matching the filters (the remote `returnCountOnly`),
@@ -488,9 +486,7 @@ object HostedStore extends HostedTableSink {
                         specs: Seq[(String, Option[String])]): Seq[Row] = {
     val t = get(itemId)
     val gIdx = groupFields.map(t.schema.fieldIndex)
-    val matching =
-      if (t.rows.isEmpty) t.rows
-      else t.rows.filter(FilterEval.compile(filters.toSeq, t.schema))
+    val matching = t.rows.filter(FilterEval.compile(filters.toSeq, t.schema))
     matching.groupBy(r => gIdx.map(r.get)).toSeq.map { case (keyVals, rows) =>
       val stats = specs.map {
         case ("count", _) => rows.size.toLong
@@ -515,12 +511,10 @@ object HostedStore extends HostedTableSink {
                   isMin: Boolean): Any = {
     val t = get(itemId)
     val idx = t.schema.fieldIndex(field)
-    val matching =
-      if (t.rows.isEmpty) Iterator.empty
-      else t.rows.iterator
-        .filter(FilterEval.compile(filters.toSeq, t.schema))
-        .map(_.get(idx))
-        .filter(_ != null)
+    val matching = t.rows.iterator
+      .filter(FilterEval.compile(filters.toSeq, t.schema))
+      .map(_.get(idx))
+      .filter(_ != null)
     if (!matching.hasNext) null
     else matching.reduce { (a, b) =>
       val c = FilterEval.cmpValues(a, b)
@@ -856,18 +850,15 @@ object FilterEval {
       case _                                          => true
     }
 
-  /** The field indexes along a (possibly nested) attribute path, and the
-    * type at its end.
-    */
-  private def indexPath(attr: String, schema: StructType): (Array[Int], DataType) = {
+  /** The field indexes along a (possibly nested) attribute path. */
+  private def indexPath(attr: String, schema: StructType): Array[Int] = {
     var t: DataType = schema
-    val idx = parsePath(attr).map { seg =>
+    parsePath(attr).map { seg =>
       val st = t.asInstanceOf[StructType]
       val i = st.fieldIndex(seg)
       t = st(i).dataType
       i
     }.toArray
-    (idx, t)
   }
 
   /** Row value at an index path; a null anywhere along the path yields
@@ -911,34 +902,6 @@ object FilterEval {
       s"unsupported comparison: ${a.getClass} vs ${b.getClass}")
   }
 
-  /** `cmpValues(_, x)` for one constant, picked from the leaf type once:
-    * a value of the leaf's own class compares against the constant
-    * normalized up front; any other value goes through [[cmpValues]],
-    * so results (and errors) are exactly those of [[cmpValues]].
-    */
-  private trait Cmp { def apply(v: Any): Int }
-  private def cmpTo(x: Any, leaf: DataType): Cmp = (leaf, x) match {
-    case (LongType | IntegerType | ShortType | ByteType, n: Number) if isIntegral(n) =>
-      val xl = n.longValue()
-      v => v match {
-        case m: Number if isIntegral(m) => java.lang.Long.compare(m.longValue(), xl)
-        case _                          => cmpValues(v, x)
-      }
-    case (DoubleType | FloatType, n @ (_: java.lang.Double | _: java.lang.Float)) =>
-      val xd = n.asInstanceOf[Number].doubleValue()
-      v => v match {
-        case m @ (_: java.lang.Double | _: java.lang.Float) =>
-          java.lang.Double.compare(m.asInstanceOf[Number].doubleValue(), xd)
-        case _ => cmpValues(v, x)
-      }
-    case (StringType, s: String) =>
-      v => v match {
-        case m: String => m.compareTo(s)
-        case _         => cmpValues(v, x)
-      }
-    case _ => v => cmpValues(v, x)
-  }
-
   /** Kleene truth values ordered FALSE < UNKNOWN < TRUE, so AND is the
     * minimum, OR the maximum and NOT the mirror image.
     */
@@ -960,10 +923,9 @@ object FilterEval {
     * results.
     *
     * The per-query work happens here, once: each attribute path
-    * resolves to field indexes, each constant is normalized and its
-    * comparator picked from the leaf type, and an `In` list becomes a
-    * hash set when the leaf and every constant are integral, or all are
-    * strings. An unresolvable path or an unsupported filter fails here.
+    * resolves to field indexes, so a row costs index lookups and
+    * [[cmpValues]] calls. An unresolvable path or an unsupported filter
+    * fails here, even on an empty table.
     */
   def compile(filters: Seq[Filter], schema: StructType): Row => Boolean = {
     val tris = filters.map(compileTri(_, schema)).toArray
@@ -976,18 +938,15 @@ object FilterEval {
 
   private def compileTri(f: Filter, schema: StructType): Tri = {
     def cmpTri(a: String, x: Any)(p: Int => Boolean): Tri = {
-      val (idx, leaf) = indexPath(a, schema)
+      val idx = indexPath(a, schema)
       if (x == null) _ => U
-      else {
-        val cmp = cmpTo(x, leaf)
-        r => {
-          val v = valueAt(idx, r)
-          if (v == null) U else if (p(cmp(v))) T else F
-        }
+      else r => {
+        val v = valueAt(idx, r)
+        if (v == null) U else if (p(cmpValues(v, x))) T else F
       }
     }
     def strTri(a: String)(p: String => Boolean): Tri = {
-      val idx = indexPath(a, schema)._1
+      val idx = indexPath(a, schema)
       r => {
         val v = valueAt(idx, r)
         if (v == null) U else if (p(v.toString)) T else F
@@ -1002,43 +961,20 @@ object FilterEval {
       case In(a, xs) =>
         // SQL IN: TRUE on a non-null match; UNKNOWN if the probe is null
         // or the list holds a null and nothing matched; else FALSE
-        val (idx, leaf) = indexPath(a, schema)
+        val idx = indexPath(a, schema)
         val consts = xs.filter(_ != null)
         val miss = if (consts.length < xs.length) U else F
-        val integralLeaf = leaf match {
-          case LongType | IntegerType | ShortType | ByteType => true
-          case _                                             => false
-        }
-        val scan: Any => Boolean = {
-          val cmps = consts.map(cmpTo(_, leaf))
-          v => cmps.exists(_(v) == 0)
-        }
-        val member: Any => Boolean =
-          if (integralLeaf && consts.forall {
-                case n: Number => isIntegral(n)
-                case _         => false
-              }) {
-            val set = consts.map(_.asInstanceOf[Number].longValue()).toSet
-            v => v match {
-              case m: Number if isIntegral(m) => set.contains(m.longValue())
-              case _                          => scan(v)
-            }
-          } else if (consts.forall(_.isInstanceOf[String])) {
-            val set = consts.toSet[Any]
-            v => v match {
-              case m: String => set.contains(m)
-              case _         => scan(v)
-            }
-          } else scan
         r => {
           val v = valueAt(idx, r)
-          if (v == null) U else if (member(v)) T else miss
+          if (v == null) U
+          else if (consts.exists(cmpValues(v, _) == 0)) T
+          else miss
         }
       case IsNull(a) =>
-        val idx = indexPath(a, schema)._1
+        val idx = indexPath(a, schema)
         r => if (valueAt(idx, r) == null) T else F
       case IsNotNull(a) =>
-        val idx = indexPath(a, schema)._1
+        val idx = indexPath(a, schema)
         r => if (valueAt(idx, r) != null) T else F
       case StringStartsWith(a, p) => strTri(a)(_.startsWith(p))
       case StringEndsWith(a, p)   => strTri(a)(_.endsWith(p))

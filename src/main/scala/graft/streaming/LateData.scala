@@ -42,7 +42,7 @@ object LateData {
     * batch truth (the late replay never corrupts emitted aggregates).
     */
   def runOnce(spark: SparkSession, dir: String,
-              stageDir: String = "/tmp/graft_latedata",
+              stageDir: String,
               lateFraction: Int = 10): DataFrame = {
     val ev = graft.api.Tables.load(spark, dir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")

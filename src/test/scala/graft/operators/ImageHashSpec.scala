@@ -233,7 +233,8 @@ class ImageHashSpec extends AnyFunSuite {
       .all("x_pipeline_multimodal")(spark, dir).collect()
     // the entry stages the signature table at this keyed path — reconcile
     // the manifest against an independent count over the same artifact
-    val h = spark.read.parquet("/tmp/graft_imghash_stage/hashes.parquet")
+    val h = spark.read.parquet(
+      graft.queries.CatalogHelpers.imgHashStageDir + "/hashes.parquet")
     val dropped = Dedup.duplicateClusters(
         Multimodal.imageNearDupPairs(h, maxHamming = 6))
       .filter(!col("keep")).count()

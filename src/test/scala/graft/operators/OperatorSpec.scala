@@ -330,7 +330,7 @@ class OperatorSpec extends AnyFunSuite {
     // one-shot build — the serve must not care how the files landed
     assert(appended === persisted)
     val deleted = rows("x_dedup_sig_deleted")
-    val tombs = spark.read.parquet("/tmp/graft_sig_life/tombstones")
+    val tombs = spark.read.parquet(graft.queries.CatalogHelpers.sigLifeDir + "/tombstones")
       .as[Long].collect().toSet
     assert(deleted.subsetOf(appended))
     assert(deleted === appended.filterNot(r => tombs.contains(r._2)))

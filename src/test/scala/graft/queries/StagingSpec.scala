@@ -43,6 +43,31 @@ class StagingSpec extends AnyFunSuite {
     assert(literals.isEmpty, literals.mkString("\n"))
   }
 
+  test("no source reads a catalog artifact at its former fixed /tmp path") {
+    // a stager's artifact used to live at /tmp/graft_<name>; a reader
+    // still naming that path reads a leftover of some other run, or
+    // nothing, instead of what this JVM staged
+    def sources(dir: String): Seq[java.nio.file.Path] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    }
+    val all = sources("src/main/scala") ++ sources("src/test/scala")
+    val named = "stagingPath\\(s?\"([A-Za-z0-9_.]+)".r
+    val names = all.filter(_.toString.startsWith("src/main"))
+      .flatMap(f => named.findAllMatchIn(Files.readString(f)).map(_.group(1)))
+      .toSet
+    assert(names.contains("imghash_stage") && names.contains("sig_life"), names)
+    val former = names.toSeq.map(n =>
+      n -> ("/tmp/graft_" + java.util.regex.Pattern.quote(n) + "(?![A-Za-z0-9_])").r)
+    val hits = for {
+      f <- all
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      (n, re) <- former if re.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: reads $n at a fixed path: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("a root chosen once cannot be moved") {
     Staging.root
     intercept[IllegalArgumentException](Staging.keepUnder("target/staging_elsewhere"))
