@@ -154,17 +154,17 @@ object HostedTables {
     audited(s"createTable $name")(for {
       norm <- graft.core.ServiceName.normalize(name)
       _ <- nonEmpty(df)
-      id <- create(df, norm, key, properties)
+      id <- create(TimestampNorm.toUtc(df).schema, norm, key, properties)
     } yield id)
 
   /** [[createTable]] past its checks: `norm` is a normalized title, and
     * the caller checks the frame is not empty (the write that follows
     * does).
     */
-  private[graft] def create(df: DataFrame, norm: String, key: Option[String],
-                     properties: Map[String, String]): Either[String, String] =
+  private[graft] def create(schema: StructType, norm: String, key: Option[String],
+                            properties: Map[String, String]): Either[String, String] =
     try {
-      val id = HostedSinks.active.create(norm, TimestampNorm.toUtc(df).schema, properties)
+      val id = HostedSinks.active.create(norm, schema, properties)
       // Reference budget: probe, register, poll until service-visible
       // (src/agol_pandas.py:293-307); fails the create if the index
       // never appears, same as the reference's ValueError.
@@ -173,6 +173,20 @@ object HostedTables {
       if (indexed) Right(id)
       else Left("Could not create unique field constraint for appends!")
     } catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
+
+  /** The table titled `norm` (a normalized title), or a new one [[create]]d
+    * with `schema` when no table has that title — the first step of
+    * [[save]], and of the streams that land in a hosted table. `schema` is
+    * only evaluated when the table is created.
+    */
+  private[graft] def resolveOrCreate(norm: String, schema: => StructType,
+                                     key: Option[String] = None,
+                                     properties: Map[String, String] = Map.empty
+                                    ): Either[String, String] =
+    HostedSinks.active.resolveByTitle(norm) match {
+      case Some(existing) => Right(existing)
+      case None => audited(s"createTable $norm")(create(schema, norm, key, properties))
+    }
 
   private def nonEmpty(df: DataFrame): Either[String, Unit] =
     if (df.isEmpty) Left("The DataFrame is empty") else Right(())
@@ -245,14 +259,8 @@ object HostedTables {
           if (HostedSinks.active.exists(tid)) Right(tid)
           else Left(s"no hosted table '$tid'")
         case None =>
-          for {
-            norm <- graft.core.ServiceName.normalize(name)
-            resolved <- HostedSinks.active.resolveByTitle(norm) match {
-              case Some(existing) => Right(existing)
-              case None =>
-                audited(s"createTable $norm")(create(df, norm, key, properties))
-            }
-          } yield resolved
+          graft.core.ServiceName.normalize(name).flatMap(
+            resolveOrCreate(_, TimestampNorm.toUtc(df).schema, key, properties))
       }
       mode = if (key.isDefined) WriteMode.Upsert else WriteMode.Append
       report <- doWrite(df, id, mode, key, chunkSize)

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
 
 /** Sort-then-chunk, the reference's `df_to_pandas_chunks`
@@ -10,31 +10,14 @@ import org.apache.spark.sql.types.LongType
   *
   * The reference's Spark branch re-collects the entire DataFrame to the
   * driver once per chunk (`src/agol_pandas.py:203-205`, O(n·chunks) — its
-  * central scalability flaw). Here chunking is *partitioning*:
-  * `repartitionByRange` gives disjoint, ordered key ranges (one per write
-  * task) with zero driver materialization — the form that survives 100 TB.
-  * Exact row-count slicing (when byte-identical chunk membership matters,
-  * e.g. the oracle tests) uses a global `row_number`, which costs a global
-  * sort — fine at audit/test scale, documented as the non-scalable variant.
+  * central scalability flaw). Here the scalable chunking is the write
+  * itself: a keyed `GraftWrite` asks Spark for a range distribution on
+  * the key, and each write task posts its sorted key range in
+  * `chunkSize`-row batches, with zero driver materialization. What stays here is exact row-count
+  * slicing (when byte-identical chunk membership matters, e.g. the
+  * oracle tests), which costs a global sort — fine at audit/test scale.
   */
 object Chunker {
-
-  /** Scalable chunking: disjoint ordered key ranges, ~targetRows each.
-    * Partition count is derived from a cheap count; each partition is
-    * internally sorted so downstream per-partition writers see key order
-    * (the property the reference's audit fields rely on,
-    * `src/agol_pandas.py:625-626`).
-    */
-  def byKeyRange(df: DataFrame, keys: Seq[String], targetRows: Long): DataFrame = {
-    require(keys.nonEmpty, "at least one key column required")
-    require(targetRows > 0, "targetRows must be positive")
-    val n = df.count()
-    if (n == 0) throw new IllegalArgumentException("The DataFrame is empty")
-    val parts = math.max(1, math.ceil(n.toDouble / targetRows).toInt)
-    val keyCols = keys.map(col).toIndexedSeq
-    df.repartitionByRange(parts, keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
-  }
 
   /** Exact chunk ids: `floor(global_rank / chunkSize)` over the global key
     * order, computed WITHOUT a single-partition window: range-partition +

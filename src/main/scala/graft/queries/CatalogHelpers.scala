@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.{HostedTables, Tables}
-import graft.core.{Chunker, ServiceName, WriteMode}
+import graft.core.{Chunker, ServiceName, TimestampNorm, WriteMode}
 import graft.operators.{Calibration, Cdc, Curation, Dedup, Embeddings, GraphOps, HtmlText, Multimodal, Profiling, Regression, Scale, Similarity, Sketches, TextAnalysis}
 import graft.sinks.HostedStore
 import graft.streaming.EventStreams
@@ -240,8 +240,9 @@ private[graft] object CatalogHelpers {
                          cols: Seq[String]): String = synchronized {
     HostedStore.dropByTitle(title)
     val df = t(s, dir, table).select(cols.map(col): _*)
-    val id = graft.core.ServiceName.normalize(title)
-      .flatMap(HostedTables.create(df, _, key, Map.empty)).fold(sys.error, identity)
+    val id = ServiceName.normalize(title)
+      .flatMap(HostedTables.create(TimestampNorm.toUtc(df).schema, _, key, Map.empty))
+      .fold(sys.error, identity)
     HostedTables.write(df, id, WriteMode.Append).fold(sys.error, identity)
     id
   }

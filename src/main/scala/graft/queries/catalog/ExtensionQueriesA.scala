@@ -838,17 +838,10 @@ private[queries] object ExtensionQueriesA {
       val grid = s.read.parquet(s"$path/grid")
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
       val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-      val name = s"stream_sq8_${System.nanoTime()}"
-      val q = graft.operators.Embeddings.encodeWithGridProjection(
-          raw, "vec_id", "embedding", grid)
-        .select("vec_id", "code_digest")
-        .writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name).orderBy("vec_id")
+      graft.streaming.StreamTuning.replay(s, dir, "embeddings.parquet", schema)(
+          graft.operators.Embeddings.encodeWithGridProjection(
+            _, "vec_id", "embedding", grid).select("vec_id", "code_digest"))
+        .orderBy("vec_id")
     }),
 
     "x_stream_extract" -> ((s, dir) => {
@@ -859,17 +852,11 @@ private[queries] object ExtensionQueriesA {
       try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       catch { case _: Exception => () }
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val name = s"stream_extract_${System.nanoTime()}"
-      val q = HtmlText.extract(
-          raw.select(col("doc_id"), syntheticHtml.as("html")),
-          "doc_id", "html")
-        .writeStream.format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .outputMode("append").start()
-      q.awaitTermination()
-      s.table(name).orderBy("doc_id")
+      graft.streaming.StreamTuning.replay(s, dir, "documents.parquet", schema)(
+          raw => HtmlText.extract(
+            raw.select(col("doc_id"), syntheticHtml.as("html")),
+            "doc_id", "html"))
+        .orderBy("doc_id")
     }),
 
     "x_sft_format" -> ((s, dir) =>

@@ -84,12 +84,8 @@ class GraftCatalog extends TableCatalog {
     val props = properties.asScala.toMap.collect {
       case (k, v) if k != "key" => k -> v
     }
-    val id = HostedSinks.active.create(title, schema, props)
-    Option(properties.get("key")).foreach { k =>
-      if (!graft.core.IndexPoll.ensureUniqueIndex(HostedSinks.active, id, k))
-        throw new IllegalStateException(
-          s"unique index on '$k' never became visible on '$id'")
-    }
+    graft.api.HostedTables.create(schema, title, Option(properties.get("key")), props)
+      .fold(e => throw new IllegalStateException(e), identity)
     loadTable(ident)
   }
 

@@ -37,9 +37,7 @@ object EventStreams {
     */
   def runUpsertWindowedOnce(spark: SparkSession, dir: String, fileGlob: String,
                             schema: StructType, title: String): DataFrame =
-    // input-derived state partitioning (see StreamTuning: streaming has
-    // no AQE coalescing, and static 32-way state shards for ≤720 rows
-    // priced 2 s of pure store bookkeeping)
+    // input-derived state partitioning (timings in StreamTuning)
     StreamTuning.withDerivedPartitions(spark, dir, fileGlob) {
       runUpsertWindowedOnceInner(spark, dir, fileGlob, schema, title)
     }
@@ -68,8 +66,7 @@ object EventStreams {
     // stream's output schema (the streaming analog of save()'s
     // resolve-or-create).
     val norm = graft.core.ServiceName.normalize(title).fold(sys.error, identity)
-    val id = graft.sinks.HostedSinks.active.resolveByTitle(norm)
-      .getOrElse(graft.sinks.HostedSinks.active.create(norm, agg.schema))
+    val id = HostedTables.resolveOrCreate(norm, agg.schema).fold(sys.error, identity)
     val ckpt = java.nio.file.Files
       .createTempDirectory(s"graft_stream_$norm")
     val q: StreamingQuery = agg.writeStream

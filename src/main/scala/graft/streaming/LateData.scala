@@ -70,11 +70,10 @@ object LateData {
 
     val schema = spark.read.parquet(s"$stageDir/ontime.parquet").schema
     // input-derived state partitioning for the replay ONLY (the staging
-    // writes above run at session parallelism — the CDC lesson). Three
-    // micro-batches each pay per-shard state-store open/commit: 32
-    // static shards priced 6.16 s vs 3.08 s derived in the r17 family
-    // drill, identical report (the drop counter counts post-shuffle
-    // partials per window — map-side, invariant to the shard count).
+    // writes above run at session parallelism — the CDC lesson; timings
+    // in StreamTuning). The report is identical at any shard count (the
+    // drop counter counts post-shuffle partials per window — map-side,
+    // invariant to the shard count).
     val q = StreamTuning.withDerivedPartitions(spark, stageDir, "*") {
       val raw = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stateless streaming calibrated-quality scoring: the NB margin fold of
@@ -20,17 +19,10 @@ object StreamCalibrate {
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, weights: Map[String, Long],
               steps: Seq[(Long, Long)], idCol: String,
-              textCol: String): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_calibrate_${System.nanoTime()}"
-    val q = StreamClassify.score(raw, weights, idCol, textCol)
-      .select(col(idCol), col("score"),
-        graft.operators.Calibration.stepColumn(col("score"), steps)
-          .as("calibrated_permille"))
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+              textCol: String): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(raw =>
+      StreamClassify.score(raw, weights, idCol, textCol)
+        .select(col(idCol), col("score"),
+          graft.operators.Calibration.stepColumn(col("score"), steps)
+            .as("calibrated_permille")))
 }

@@ -51,9 +51,8 @@ object StreamCdc {
     require(payload.nonEmpty, "cdc stream has no payload columns")
     val snapFields = changes.schema.fields.filter(_.name != opCol)
     val snapSchema = StructType(snapFields)
-    val norm = graft.core.ServiceName.normalize(title).fold(sys.error, identity)
-    val id = graft.sinks.HostedSinks.active.resolveByTitle(norm)
-      .getOrElse(graft.sinks.HostedSinks.active.create(norm, snapSchema))
+    val id = graft.core.ServiceName.normalize(title)
+      .flatMap(HostedTables.resolveOrCreate(_, snapSchema)).fold(sys.error, identity)
     val q = changes.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {

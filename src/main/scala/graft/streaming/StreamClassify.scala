@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stateless streaming quality classification: apply the NB-margin model
@@ -46,20 +45,13 @@ object StreamClassify {
       .withColumn("label", (col("score") > 0).cast("int"))
   }
 
-  /** Drive the stream end-to-end with an AvailableNow trigger into a
-    * memory sink and return the scored table — deterministic, so the
-    * DuckDB oracle replays it like any batch query.
+  /** Drive the stream end-to-end ([[StreamTuning.replay]]) and return
+    * the scored table — deterministic, so the DuckDB oracle replays it
+    * like any batch query.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, weights: Map[String, Long],
-              idCol: String, textCol: String): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_classify_${System.nanoTime()}"
-    val q = score(raw, weights, idCol, textCol)
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+              idCol: String, textCol: String): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(
+      score(_, weights, idCol, textCol))
 }

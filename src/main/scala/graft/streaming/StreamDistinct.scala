@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Sketches
@@ -44,25 +43,15 @@ object StreamDistinct {
         col("n_distinct_est"))
   }
 
-  /** Drive the counter over a static parquet replay (AvailableNow →
-    * memory sink, append mode): emitted = every window the final
-    * watermark passed, exactly like [[StreamHeavyHitters.runOnce]].
+  /** Drive the counter over a static parquet replay
+    * ([[StreamTuning.replay]]): emitted = every window the final
+    * watermark passed.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, itemCol: String,
               capacity: Int = 512): DataFrame =
-    // input-derived state partitioning (StreamTuning, r17: no AQE
-    // coalescing in streams — static 32 state shards for ~720 windows
-    // priced 4.70 s vs 2.61 s at the derived count in the family drill)
-    StreamTuning.withDerivedPartitions(spark, dir, fileGlob) {
-      val raw = spark.readStream.schema(schema)
-        .option("pathGlobFilter", fileGlob).parquet(dir)
-      val events = graft.core.TimestampNorm.normalizeEventTime(raw)
-      val name = s"stream_distinct_${System.nanoTime()}"
-      val q = windowedDistinct(events, itemCol, capacity)
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      q.awaitTermination()
-      spark.table(name)
+    StreamTuning.replay(spark, dir, fileGlob, schema) { raw =>
+      windowedDistinct(graft.core.TimestampNorm.normalizeEventTime(raw),
+        itemCol, capacity)
     }
 }

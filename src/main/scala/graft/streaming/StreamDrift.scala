@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming distribution-drift monitor: per event-time window, the χ²
@@ -72,25 +71,16 @@ object StreamDrift {
   }
 
   /** Drive the monitor end-to-end over a static parquet replay
-    * (AvailableNow → memory sink, append mode) and return the emitted
-    * windows — every window whose end the final watermark passed, i.e.
-    * all but the trailing partial window. `tsNanos`/NTZ normalization
-    * mirrors the batch loader.
+    * ([[StreamTuning.replay]]) and return the emitted windows — every
+    * window whose end the final watermark passed, i.e. all but the
+    * trailing partial window. `tsNanos`/NTZ normalization mirrors the
+    * batch loader.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, refCounts: Map[String, Long],
               window_ : String = "1 hour"): DataFrame =
-    // input-derived state partitioning (StreamTuning, r17 family drill:
-    // 3.31 s @ 32 static shards vs 1.42 s derived, identical rows)
-    StreamTuning.withDerivedPartitions(spark, dir, fileGlob) {
-      val raw = spark.readStream.schema(schema)
-        .option("pathGlobFilter", fileGlob).parquet(dir)
-      val events = graft.core.TimestampNorm.normalizeEventTime(raw)
-      val name = s"stream_drift_${System.nanoTime()}"
-      val q = windowedChiSquare(events, refCounts)
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      q.awaitTermination()
-      spark.table(name)
+    StreamTuning.replay(spark, dir, fileGlob, schema) { raw =>
+      windowedChiSquare(graft.core.TimestampNorm.normalizeEventTime(raw),
+        refCounts)
     }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stateless streaming DSIR gate: score each ARRIVING document's
@@ -40,20 +39,13 @@ object StreamDsir {
           .as("dsir_score"))
   }
 
-  /** Drive the stream end-to-end with an AvailableNow trigger into a
-    * memory sink and return the scored table — deterministic, so the
-    * DuckDB oracle replays it like any batch query.
+  /** Drive the stream end-to-end ([[StreamTuning.replay]]) and return
+    * the scored table — deterministic, so the DuckDB oracle replays it
+    * like any batch query.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, ratios: Map[String, Double],
-              idCol: String, textCol: String): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_dsir_${System.nanoTime()}"
-    val q = score(raw, ratios, idCol, textCol)
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+              idCol: String, textCol: String): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(
+      score(_, ratios, idCol, textCol))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming EXACT deduplication — the streaming counterpart of
@@ -44,8 +43,8 @@ object StreamExactDedup {
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("text_hash")
 
-  /** Drive the stream end-to-end (AvailableNow → memory sink) over a
-    * static parquet replay and return the SURVIVING HASH SET — the
+  /** Drive the stream end-to-end over a static parquet replay
+    * ([[StreamTuning.replay]]) and return the SURVIVING HASH SET — the
     * deterministic projection of the streaming dedup (see class doc).
     * Event time is synthesized deterministically from `idCol` (a bounded
     * replay has no wall-clock), so the whole run is replayable by the
@@ -53,29 +52,18 @@ object StreamExactDedup {
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, idCol: String, textCol: String,
-              horizon: String = "1 hour"): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    // offset by a day: id 0 at exactly epoch 0 equals the stream's
-    // initial watermark and would be discarded as late before dedup.
-    // Event time is id MODULO the horizon span, so the synthetic ts range
-    // always fits inside the watermark horizon — the surviving-hash-set ==
-    // batch-DISTINCT determinism claim then holds even if the replay
-    // splits into multiple micro-batches (multi-file glob or
-    // maxFilesPerTrigger): no duplicate can land beyond the watermark of
-    // an earlier batch, because the whole stream spans < horizon.
-    val withTs = raw.withColumn("__ts",
-      timestamp_seconds(lit(86400L) + (col(idCol).cast("long") % 3600L)))
-    val name = s"stream_exactdedup_${System.nanoTime()}"
-    // input-derived state partitioning (StreamTuning, r17 family drill:
-    // 1.91 s @ 32 static shards vs 0.89 s derived, identical hash set)
-    StreamTuning.withDerivedPartitions(spark, dir, fileGlob) {
-      val q = dedupped(withTs, textCol, "__ts", horizon)
-        .select("text_hash")
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      q.awaitTermination()
-      spark.table(name)
+              horizon: String = "1 hour"): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema) { raw =>
+      // offset by a day: id 0 at exactly epoch 0 equals the stream's
+      // initial watermark and would be discarded as late before dedup.
+      // Event time is id MODULO the horizon span, so the synthetic ts range
+      // always fits inside the watermark horizon — the surviving-hash-set ==
+      // batch-DISTINCT determinism claim then holds even if the replay
+      // splits into multiple micro-batches (multi-file glob or
+      // maxFilesPerTrigger): no duplicate can land beyond the watermark of
+      // an earlier batch, because the whole stream spans < horizon.
+      val withTs = raw.withColumn("__ts",
+        timestamp_seconds(lit(86400L) + (col(idCol).cast("long") % 3600L)))
+      dedupped(withTs, textCol, "__ts", horizon).select("text_hash")
     }
-  }
 }

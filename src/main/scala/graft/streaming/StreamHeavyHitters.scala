@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Sketches
@@ -60,24 +59,15 @@ object StreamHeavyHitters {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  /** Drive the monitor over a static parquet replay (AvailableNow →
-    * memory sink, append mode): emitted = every window the final
-    * watermark passed, exactly like [[StreamDrift.runOnce]].
+  /** Drive the monitor over a static parquet replay
+    * ([[StreamTuning.replay]]): emitted = every window the final
+    * watermark passed.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, itemCol: String, k: Int,
               capacity: Int = 512): DataFrame =
-    // input-derived state partitioning (StreamTuning, r17 family drill:
-    // 2.35 s @ 32 static shards vs 1.63 s derived, identical rows)
-    StreamTuning.withDerivedPartitions(spark, dir, fileGlob) {
-      val raw = spark.readStream.schema(schema)
-        .option("pathGlobFilter", fileGlob).parquet(dir)
-      val events = graft.core.TimestampNorm.normalizeEventTime(raw)
-      val name = s"stream_heavyhitters_${System.nanoTime()}"
-      val q = windowedTopK(events, itemCol, k, capacity)
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      q.awaitTermination()
-      spark.table(name)
+    StreamTuning.replay(spark, dir, fileGlob, schema) { raw =>
+      windowedTopK(graft.core.TimestampNorm.normalizeEventTime(raw),
+        itemCol, k, capacity)
     }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming image near-dup detection vs a persisted signature index —
@@ -66,31 +65,13 @@ object StreamImageDedup {
   }
 
   /** Drive the stream end-to-end (readStream over the staged signature
-    * parquet → band join → memory sink, AvailableNow) and return the
-    * hits table — deterministic integer arithmetic throughout, so the
-    * DuckDB oracle replays the LIVE streaming path like a batch query.
-    *
-    * Derived state partitioning measured and REJECTED (r17 family
-    * drill: 2.25/2.51/2.41 s at 32/8/1 — the stream-static band join
-    * gates on the same conf, the StreamCdc lesson; there is no
-    * aggregation state here to coalesce).
+    * parquet → band join, [[StreamTuning.replay]]) and return the hits
+    * table — deterministic integer arithmetic throughout, so the DuckDB
+    * oracle replays the LIVE streaming path like a batch query.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, streamPred: org.apache.spark.sql.Column,
-              index: DataFrame, maxHamming: Int = 6): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_imagehash_${System.nanoTime()}"
-    val q = vsIndexHits(raw.filter(streamPred), index, maxHamming)
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    // detach the result from the sink's temp view and drop it — a
-    // bench/catalog loop would otherwise accumulate one driver-held
-    // hit table per invocation (the ContextCleaner reclaims the
-    // checkpoint blocks once the returned frame is unreachable)
-    val out = spark.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
-  }
+              index: DataFrame, maxHamming: Int = 6): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(raw =>
+      vsIndexHits(raw.filter(streamPred), index, maxHamming))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Serve-time line-level boilerplate removal on a document STREAM — the
@@ -49,21 +48,14 @@ object StreamLineDedup {
         (size(lines) - size(kept)).cast("long").as("n_removed"))
   }
 
-  /** Drive the stream end-to-end with an AvailableNow trigger into a
-    * memory sink and return the cleaned table — deterministic, so the
-    * DuckDB oracle replays it like any batch query.
+  /** Drive the stream end-to-end ([[StreamTuning.replay]]) and return
+    * the cleaned table — deterministic, so the DuckDB oracle replays it
+    * like any batch query.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, boilerplate: Set[String],
               idCol: String, textCol: String,
-              prep: DataFrame => DataFrame = identity): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_linededup_${System.nanoTime()}"
-    val q = clean(prep(raw), boilerplate, idCol, textCol)
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+              prep: DataFrame => DataFrame = identity): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(raw =>
+      clean(prep(raw), boilerplate, idCol, textCol))
 }

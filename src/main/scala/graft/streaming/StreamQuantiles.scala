@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Sketches
@@ -48,24 +47,15 @@ object StreamQuantiles {
         col("n_events") +: labeled.map(l => col(l._2)): _*)
   }
 
-  /** Drive over a static parquet replay (AvailableNow → memory sink,
-    * append mode), same contract as [[StreamDrift.runOnce]].
+  /** Drive over a static parquet replay ([[StreamTuning.replay]]),
+    * same contract as [[StreamDrift.runOnce]].
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, valueCol: String,
               qs: Seq[Double] = Seq(0.5, 0.9, 0.99),
               capacity: Int = 4096): DataFrame =
-    // input-derived state partitioning (StreamTuning, r17 family drill:
-    // 2.75 s @ 32 static shards vs 2.09 s derived, identical rows)
-    StreamTuning.withDerivedPartitions(spark, dir, fileGlob) {
-      val raw = spark.readStream.schema(schema)
-        .option("pathGlobFilter", fileGlob).parquet(dir)
-      val events = graft.core.TimestampNorm.normalizeEventTime(raw)
-      val name = s"stream_quantiles_${System.nanoTime()}"
-      val q = windowedQuantiles(events, valueCol, qs, capacity)
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      q.awaitTermination()
-      spark.table(name)
+    StreamTuning.replay(spark, dir, fileGlob, schema) { raw =>
+      windowedQuantiles(graft.core.TimestampNorm.normalizeEventTime(raw),
+        valueCol, qs, capacity)
     }
 }

@@ -28,11 +28,9 @@ object StreamRouter {
     */
   def route(spark: SparkSession, scored: DataFrame, idCol: String,
             mainTitle: String, quarantineTitle: String): (String, String) = {
-    def resolve(title: String, schema: StructType): String = {
-      val norm = graft.core.ServiceName.normalize(title).fold(sys.error, identity)
-      graft.sinks.HostedSinks.active.resolveByTitle(norm)
-        .getOrElse(graft.sinks.HostedSinks.active.create(norm, schema))
-    }
+    def resolve(title: String, schema: StructType): String =
+      graft.core.ServiceName.normalize(title)
+        .flatMap(HostedTables.resolveOrCreate(_, schema)).fold(sys.error, identity)
     val outSchema = scored.schema
     val mainId = resolve(mainTitle, outSchema)
     val quarId = resolve(quarantineTitle, outSchema)

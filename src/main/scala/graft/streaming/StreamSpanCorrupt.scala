@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stateless streaming span corruption: the T5 denoising-pair
@@ -76,19 +75,12 @@ object StreamSpanCorrupt {
           .as("target_text"))
   }
 
-  /** Drive the stream end-to-end (AvailableNow → memory sink) and return
+  /** Drive the stream end-to-end ([[StreamTuning.replay]]) and return
     * the pair table — deterministic, oracle-replayable.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, idCol: String, textCol: String,
-              maskPermille: Int = 150): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_spancorrupt_${System.nanoTime()}"
-    val q = pairs(raw, idCol, textCol, maskPermille)
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+              maskPermille: Int = 150): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(
+      pairs(_, idCol, textCol, maskPermille))
 }

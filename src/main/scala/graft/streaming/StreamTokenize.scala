@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stateless streaming tokenizer-apply: segment each arriving document
@@ -37,19 +36,12 @@ object StreamTokenize {
             .cast("long"))
           .as("n_subwords"))
 
-  /** Drive the stream end-to-end (AvailableNow → memory sink) and
+  /** Drive the stream end-to-end ([[StreamTuning.replay]]) and
     * return the counted table — deterministic, DuckDB-replayable.
     */
   def runOnce(spark: SparkSession, dir: String, fileGlob: String,
               schema: StructType, vocab: Array[String],
-              idCol: String, textCol: String): DataFrame = {
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob).parquet(dir)
-    val name = s"stream_tokenize_${System.nanoTime()}"
-    val q = tokenize(raw, vocab, idCol, textCol)
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).outputMode("append").start()
-    q.awaitTermination()
-    spark.table(name)
-  }
+              idCol: String, textCol: String): DataFrame =
+    StreamTuning.replay(spark, dir, fileGlob, schema)(
+      tokenize(_, vocab, idCol, textCol))
 }

@@ -7,7 +7,8 @@ import graft.{LocalSession, SparkEntry}
   * (the shipped path) and once bypassed at the session's static count,
   * and diffs the full collected output. Any value difference —
   * including x_stream_latedata's drop-telemetry row, which is engine
-  * metrics rather than SQL — fails loudly.
+  * metrics rather than SQL — fails loudly. That the derived count is the
+  * one a stateful replay's state store runs at is `ReplaySpec`'s check.
   * `runMain graft.tools.StreamInvarianceCheck [sfDir]`
   */
 object StreamInvarianceCheck {
@@ -30,40 +31,6 @@ object StreamInvarianceCheck {
         val diff = derived.zip(static).find { case (a, b) => a != b }
         println(s"[invar] $name: MISMATCH derived=${derived.size} rows " +
           s"static=${static.size} rows, first diff: $diff")
-      }
-    }
-    // Shard-count witness (the "Done =" clause of the r16 verdict item):
-    // drive one derived-scope stream with the query handle kept and read
-    // numShufflePartitions out of its own StateOperatorProgress — the
-    // checkpoint's state-shard count must equal the derived count, not
-    // the session's static conf.
-    locally {
-      import org.apache.spark.sql.streaming.Trigger
-      val dir = sfDir
-      val glob = "events.parquet"
-      val schema = spark.read.parquet(s"$dir/$glob").schema
-      val derived = graft.streaming.StreamTuning.derivedPartitions(spark,
-        graft.streaming.StreamTuning.inputBytes(spark, dir, glob))
-      val shards = graft.streaming.StreamTuning
-        .withDerivedPartitions(spark, dir, glob) {
-          val raw = spark.readStream.schema(schema)
-            .option("pathGlobFilter", glob).parquet(dir)
-          val events = graft.core.TimestampNorm.normalizeEventTime(raw)
-          val q = graft.streaming.StreamDistinct
-            .windowedDistinct(events, "user_id", 512)
-            .writeStream.format("memory")
-            .queryName(s"shard_witness_${System.nanoTime()}")
-            .trigger(Trigger.AvailableNow()).outputMode("append").start()
-          q.awaitTermination()
-          q.recentProgress.flatMap(_.stateOperators.map(_.numShufflePartitions))
-            .distinct.toSeq
-        }
-      println(s"[invar] shard witness: derived=$derived " +
-        s"state numShufflePartitions=${shards.mkString(",")} " +
-        s"session conf=${spark.sessionState.conf.numShufflePartitions}")
-      if (shards.exists(_ != derived.toLong)) {
-        failures += 1
-        println("[invar] shard witness MISMATCH")
       }
     }
     spark.stop()

@@ -1,35 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ChunkerSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
   import spark.implicits._
-
-  test("byKeyRange: disjoint ordered key ranges, all rows kept") {
-    val df = (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    val chunked = Chunker.byKeyRange(df, Seq("k"), 100)
-    assert(chunked.count() == 1000)
-    assert(chunked.rdd.getNumPartitions == 10)
-    // Per-partition (min, max) ranges must be disjoint and ordered.
-    val ranges = chunked
-      .withColumn("pid", spark_partition_id())
-      .groupBy("pid").agg(min("k").as("lo"), max("k").as("hi"))
-      .orderBy("lo")
-      .as[(Int, Long, Long)].collect()
-    ranges.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 < lo2)
-      case _                               =>
-    }
-  }
-
-  test("byKeyRange rejects empty input like the reference") {
-    val empty = spark.emptyDataFrame.withColumn("k", lit(1L)).filter(lit(false))
-    intercept[IllegalArgumentException] {
-      Chunker.byKeyRange(empty, Seq("k"), 10)
-    }
-  }
 
   test("withChunkIds: exact floor((rn-1)/size) ids") {
     val df = (1 to 25).map(i => Tuple1(i.toLong)).toDF("k")

@@ -60,8 +60,8 @@ class StreamResumeSpec extends AnyFunSuite {
           col("event_type"), col("n"))
         .withColumn("merge_key",
           concat_ws("|", col("window_start_ms"), col("event_type")))
-      val id = graft.sinks.HostedSinks.active.resolveByTitle(norm)
-        .getOrElse(graft.sinks.HostedSinks.active.create(norm, agg.schema))
+      val id = graft.api.HostedTables.resolveOrCreate(norm, agg.schema)
+        .fold(sys.error, identity)
       val q = agg.writeStream
         .format("graft")
         .option("itemId", id)
