@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 /** Session-scoped audit log — the reference's module-global `AP_LOG`
   * bookkeeping (`/root/reference/src/agol_pandas.py:8-43`, `33-43`):
@@ -14,26 +14,42 @@ import scala.collection.mutable.ArrayBuffer
   * [[RetryPolicy]] — a cross-executor mutable global would serialize the
   * cluster; what belongs at session scope is the *record*, not the
   * backoff coordination.
+  *
+  * Each log keeps its most recent [[MaxLines]] lines: a stream that writes
+  * through the connector adds a line per micro-batch, so an unbounded log
+  * would grow for the life of the JVM. `failures` is a counter of its
+  * own, so it stays exact when old failure lines fall out.
   */
 object SessionLog {
 
-  private val info = ArrayBuffer.empty[String]
-  private val fails = ArrayBuffer.empty[String]
+  /** How many of the most recent lines each log keeps. */
+  final val MaxLines = 1000
 
-  def recordInfo(message: String): Unit = synchronized { info += message }
+  private val info = mutable.Queue.empty[String]
+  private val fails = mutable.Queue.empty[String]
+  private var failCount = 0
 
-  def recordFailure(message: String): Unit = synchronized { fails += message }
+  private def keep(log: mutable.Queue[String], message: String): Unit = {
+    log.enqueue(message)
+    if (log.size > MaxLines) log.dequeue()
+  }
 
-  /** All recorded messages, oldest first (`AP_LOG.logging_info`). */
+  def recordInfo(message: String): Unit = synchronized { keep(info, message) }
+
+  def recordFailure(message: String): Unit = synchronized {
+    keep(fails, message); failCount += 1
+  }
+
+  /** The recorded messages, oldest first (`AP_LOG.logging_info`). */
   def loggingInfo: Seq[String] = synchronized { info.toVector }
 
-  /** All recorded failures, oldest first (`AP_LOG.fail_log`). */
+  /** The recorded failures, oldest first (`AP_LOG.fail_log`). */
   def failLog: Seq[String] = synchronized { fails.toVector }
 
   /** `AP_LOG.failures` — the failure count backing the reference's rising
-    * backoff floor.
+    * backoff floor; every failure since the last [[clear]], kept or not.
     */
-  def failures: Int = synchronized { fails.size }
+  def failures: Int = synchronized { failCount }
 
-  def clear(): Unit = synchronized { info.clear(); fails.clear() }
+  def clear(): Unit = synchronized { info.clear(); fails.clear(); failCount = 0 }
 }

@@ -36,10 +36,6 @@ object TimestampNorm {
     }
   }
 
-  /** True iff every timestamp column in the frame is tz-aware (UTC-stored). */
-  def isUtcNormalized(df: DataFrame): Boolean =
-    !df.schema.fields.exists(_.dataType == TimestampNTZType)
-
   /** Normalize one event-time column from whatever the fixture parquet
     * carries to watermark-ready TIMESTAMP, mirroring the batch read path
     * (`Tables.load` + [[toUtc]]): epoch-nanos BIGINT → micros;

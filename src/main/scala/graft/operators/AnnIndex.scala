@@ -1442,17 +1442,6 @@ object AnnIndex {
     if (!live.isEmpty) ivfbqAppend(live, keyCol, vecCol, path)
   }
 
-  /** [[ivfCompactIfNeeded]]'s composed-BQ sibling — fires
-    * [[ivfbqCompact]].
-    */
-  def ivfbqCompactIfNeeded(spark: SparkSession, path: String,
-                           maxFiles: Long = 512,
-                           maxTombstoneFracPct: Int = 20): Boolean = {
-    val go = needsCompact(spark, path, "codes", maxFiles, maxTombstoneFracPct)
-    if (go) ivfbqCompact(spark, path)
-    go
-  }
-
   // ----------------------------------------------------------- IVF-PQ
 
   /** Composed IVF-PQ index — the canonical memory-side ANN layout at
@@ -1930,24 +1919,6 @@ object AnnIndex {
                          maxTombstoneFracPct: Int = 20): Boolean = {
     val go = needsCompact(spark, path, "cells", maxFiles, maxTombstoneFracPct)
     if (go) ivfCompact(spark, path)
-    go
-  }
-
-  /** [[ivfCompactIfNeeded]]'s PQ sibling — fires [[pqCompact]]. */
-  def pqCompactIfNeeded(spark: SparkSession, path: String,
-                        maxFiles: Long = 512,
-                        maxTombstoneFracPct: Int = 20): Boolean = {
-    val go = needsCompact(spark, path, "codes", maxFiles, maxTombstoneFracPct)
-    if (go) pqCompact(spark, path)
-    go
-  }
-
-  /** [[ivfCompactIfNeeded]]'s IVF-PQ sibling — fires [[ivfpqCompact]]. */
-  def ivfpqCompactIfNeeded(spark: SparkSession, path: String,
-                           maxFiles: Long = 512,
-                           maxTombstoneFracPct: Int = 20): Boolean = {
-    val go = needsCompact(spark, path, "codes", maxFiles, maxTombstoneFracPct)
-    if (go) ivfpqCompact(spark, path)
     go
   }
 }

@@ -42,17 +42,20 @@ object HostedStore extends HostedTableSink {
 
   /** A service-side index definition, named the way the reference names
     * the unique key constraint: `UX_<TITLE>_<TABLE>_<field>_ASC`
-    * (`src/agol_pandas.py:293`). `visibleAfterPolls` models the remote
-    * service's *asynchronous* index creation: the index only reports
-    * visible after that many `fldHasUniqueIndex` probes (0 = immediately,
-    * the default; specs raise it to exercise the reference's 5 s × 12 poll
-    * budget, `src/agol_pandas.py:302-307`).
+    * (`src/agol_pandas.py:293`). `pollsLeft` models the remote service's
+    * *asynchronous* index creation: the index is visible once it is ≤ 0,
+    * and each [[fieldHasUniqueIndex]] probe of an invisible index counts
+    * it down (it starts at [[indexCreationPollDelay]]: 0 = immediately,
+    * the default; specs raise it to exercise the reference's 5 s × 12
+    * poll budget, `src/agol_pandas.py:302-307`).
     */
   final case class IndexState(
       name: String,
       field: String,
       isUnique: Boolean,
-      visibleAfterPolls: Int)
+      pollsLeft: Int) {
+    def visible: Boolean = pollsLeft <= 0
+  }
 
   /** A secondary dataset carried by an item — the feature LAYER a hosted
     * item may hold alongside (or instead of) its table. A POINT layer is
@@ -68,28 +71,22 @@ object HostedStore extends HostedTableSink {
     * reader resolves `item.layers[0]` and then lets `item.tables[0]`
     * shadow it (`src/agol_pandas.py:239-243`), so every query verb serves
     * the table and the layer stays reachable only via [[shadowedLayerOf]].
+    *
+    * A state is the only place that holds anything about its table (the
+    * staging of writes in flight aside): index visibility lives on its
+    * `indexes`, and its filtered scans in its own `scans` memo.
     */
   final case class TableState(
       itemId: String,
       title: String,
       schema: StructType,
       rows: Vector[Row],
-      uniqueIndexes: Set[String],
       properties: Map[String, String] = Map.empty,
       indexes: Vector[IndexState] = Vector.empty,
       appliedBatches: Set[String] = Set.empty,
       committedParts: Set[String] = Set.empty,
       kind: String = "table",
       shadowedLayer: Option[DatasetState] = None,
-      /** Monotone per-item ROWS version, bumped centrally by
-        * [[computeItem]] whenever a mutation replaces the rows vector
-        * (and never otherwise — index/property-only updates keep it).
-        * The scan cache keys on (itemId, version): a superseded
-        * version's entries are invalidated eagerly at rotation, so the
-        * 8-slot LRU can never pin a dead multi-large-table rows vector
-        * until later misses happen to evict it.
-        */
-      version: Long = 0L,
       /** Maintained value→row-position index per unique field
         * (lowercased field → value → index into `rows`). This is the
         * service-contract cost model: a real hosted upsert goes through
@@ -100,7 +97,53 @@ object HostedStore extends HostedTableSink {
         * lazily on first use, maintained for every unique field by each
         * apply (see `Placement`), INVALIDATED by delete/truncate.
         */
-      keyPos: Map[String, Map[Any, Int]] = Map.empty)
+      keyPos: Map[String, Map[Any, Int]] = Map.empty,
+      /** Filtered passes over THIS state's `rows`; [[computeItem]] gives
+        * a state a fresh memo whenever its rows vector changes, and
+        * index- or property-only updates keep it. See [[ScanMemo]].
+        */
+      scans: ScanMemo = new ScanMemo) {
+    def hasVisibleUniqueIndex(fl: String): Boolean =
+      indexes.exists(ix => ix.isUnique && ix.field == fl && ix.visible)
+  }
+
+  /** At most this many filter sets are memoized per table state: a
+    * self-join of two filtered reads of one table needs two, and the
+    * rest is headroom for concurrent scans of the same rows.
+    */
+  private final val ScanMemoSlots = 4
+
+  /** The filtered passes of one table state, keyed by the normalized
+    * filter fingerprint, least recently used first out. Offset
+    * pagination naively re-filters the whole table per page —
+    * O(pages × table) = O(table² / pageSize), quadratic in the table
+    * (measured: the sf1 pushdown scan trended past linear as page count
+    * grew). A real service executes the query once and cursors through
+    * it; the memo gives the double the same cost shape, and a scan's
+    * count and pages share one pass.
+    *
+    * The memo belongs to one rows vector, so it can never serve stale
+    * rows: a reader that filtered a superseded state writes into that
+    * state's memo, which becomes unreachable together with the state.
+    * Worst case per live state: [[ScanMemoSlots]] pointer arrays over
+    * its own rows (values share Row references with the table; nothing
+    * is copied). Empty tables take no entry.
+    */
+  final class ScanMemo {
+    private val passes =
+      new java.util.LinkedHashMap[Seq[Any], Vector[Row]](8, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Seq[Any], Vector[Row]]): Boolean =
+          size() > ScanMemoSlots
+      }
+    private[HostedStore] def get(key: Seq[Any]): Option[Vector[Row]] =
+      synchronized(Option(passes.get(key)))
+    private[HostedStore] def put(key: Seq[Any], rows: Vector[Row]): Unit =
+      synchronized { passes.put(key, rows); () }
+    /** Test hook: every memoized pass, by filter fingerprint. */
+    private[graft] def entries: Map[Seq[Any], Vector[Row]] =
+      synchronized(passes.asScala.toMap)
+  }
 
   private val tables = new ConcurrentHashMap[String, TableState]()
   private val nextId = new AtomicLong(1000)
@@ -111,62 +154,30 @@ object HostedStore extends HostedTableSink {
     * (round 7's store-wide `synchronized` serialized all 32 DataWriter
     * commits on one monitor; commits to the SAME item still serialize, as
     * they must — they contend for one row vector). `f` returns the new
-    * state plus a result value threaded back to the caller.
+    * state plus a result value threaded back to the caller. A new rows
+    * vector gets a fresh scan memo here, in one place.
     */
   private def computeItem[A](itemId: String)(f: TableState => (TableState, A)): A = {
     var out: Option[A] = None
-    var publishedVersion = -1L
     tables.compute(itemId, (_: String, t: TableState) => {
       if (t == null) throw new NoSuchElementException(s"no hosted table '$itemId'")
-      val (nt0, a) = f(t)
+      val (nt, a) = f(t)
       out = Some(a)
-      // Central rows-version bump: every mutation flows through here, so
-      // ordinary version rotation (append/upsert between scans) can never
-      // leave a superseded rows vector pinned by the cache. Index/
-      // property-only updates keep the version (their cached filter
-      // passes stay valid — same rows).
-      if (nt0.rows ne t.rows) {
-        publishedVersion = t.version + 1
-        nt0.copy(version = publishedVersion)
-      } else nt0
+      if (nt.rows ne t.rows) nt.copy(scans = new ScanMemo) else nt
     })
-    // Invalidate AFTER the new version is published (not inside the
-    // compute): a concurrent reader that snapshotted the old state and
-    // finishes its filter pass late either (a) puts before this line —
-    // removed here — or (b) puts after, where filteredRows' own
-    // version-at-put check sees the published new version and skips the
-    // insert. Invalidating inside the compute left a window (invalidate →
-    // reader put → publish) that re-pinned the dead rows vector. Only
-    // entries BELOW the just-published version are removed: a concurrent
-    // reader may already have cached passes for the NEW version in the
-    // publish→invalidate window, and evicting those just re-runs an
-    // O(table) filter pass under write/scan interleaving for nothing.
-    if (publishedVersion >= 0) invalidateFilterCache(itemId, publishedVersion)
     out.get
   }
-  /** Per-(item, field) countdown of polls remaining until the index
-    * reports visible — the fake's async-creation knob.
-    */
-  private val pendingPolls = new ConcurrentHashMap[(String, String), Int]()
   /** How many visibility probes a newly created index stays invisible for
     * (simulated async service-side creation). 0 = synchronous.
     */
   @volatile var indexCreationPollDelay: Int = 0
 
-  def reset(): Unit = {
-    tables.clear(); pendingPolls.clear(); staged.clear()
-    filteredCache.synchronized(filteredCache.clear())
-  }
+  def reset(): Unit = { tables.clear(); staged.clear() }
 
-  /** Removes the table; true when it existed. */
+  /** Removes the table and its staging; true when the table existed. */
   def drop(itemId: String): Boolean = {
     val existed = tables.remove(itemId) != null
     staged.keySet.removeIf(_._1 == itemId)
-    // cache keys pin their table's rows vector — a dropped multi-GB
-    // table must not stay reachable through the scan cache until eight
-    // later misses happen to evict it (drops are rare; clearing the
-    // 8-slot cache wholesale is cheaper than mapping itemId -> keys)
-    filteredCache.synchronized(filteredCache.clear())
     existed
   }
 
@@ -196,7 +207,7 @@ object HostedStore extends HostedTableSink {
     // The reference stamps the title into the item-properties dict before
     // content.add (`src/agol_pandas.py:517-520`); mirror that so a
     // round-tripped properties map always carries the title.
-    tables.put(id, TableState(id, title, schema, Vector.empty, Set.empty,
+    tables.put(id, TableState(id, title, schema, Vector.empty,
       properties + ("title" -> title)))
     id
   }
@@ -231,7 +242,7 @@ object HostedStore extends HostedTableSink {
       (t.copy(
         schema = tableSchema, rows = Vector.empty, kind = "table",
         shadowedLayer = Some(DatasetState(t.schema, t.rows)),
-        uniqueIndexes = Set.empty, indexes = Vector.empty,
+        indexes = Vector.empty,
         appliedBatches = Set.empty, committedParts = Set.empty,
         keyPos = Map.empty), ())
     }
@@ -272,7 +283,7 @@ object HostedStore extends HostedTableSink {
     computeItem(itemId) { t =>
       if (batchId.exists(t.appliedBatches.contains)) (t, 0L)
       else {
-        require(t.uniqueIndexes.contains(keyField.toLowerCase),
+        require(t.hasVisibleUniqueIndex(keyField.toLowerCase),
           s"delete requires a unique index on '$keyField'")
         val ki = t.schema.fieldIndex(keyField)
         val ks = keys.toSet
@@ -287,9 +298,9 @@ object HostedStore extends HostedTableSink {
   /** Register a unique index (`add_to_definition({"indexes":[…]})`,
     * `src/agol_pandas.py:293-300`), named the way the reference names it.
     * Idempotent; returns the index name. Creation is *asynchronous* when
-    * [[indexCreationPollDelay]] > 0: the index only becomes usable (and a
-    * member of `uniqueIndexes`) after that many [[fieldHasUniqueIndex]]
-    * probes — the client must poll, exactly like the remote service.
+    * [[indexCreationPollDelay]] > 0: the index only becomes usable after
+    * that many [[fieldHasUniqueIndex]] probes — the client must poll,
+    * exactly like the remote service.
     */
   def addUniqueIndex(itemId: String, field: String): String =
     computeItem(itemId) { t =>
@@ -307,35 +318,27 @@ object HostedStore extends HostedTableSink {
           // table name is the item id.
           val name = s"UX_${t.title.toUpperCase}_${itemId.toUpperCase}_${field}_ASC"
           val ix = IndexState(name, fl, isUnique = true, indexCreationPollDelay)
-          val visible = indexCreationPollDelay <= 0
-          if (!visible) pendingPolls.put((itemId, fl), indexCreationPollDelay)
-          (t.copy(
-            indexes = t.indexes :+ ix,
-            uniqueIndexes = if (visible) t.uniqueIndexes + fl else t.uniqueIndexes,
-            keyPos = t.keyPos + (fl -> pos)),
-            name)
+          (t.copy(indexes = t.indexes :+ ix, keyPos = t.keyPos + (fl -> pos)), name)
       }
     }
 
   /** One visibility probe (`fld_has_unique_idx`, `src/agol_pandas.py:286-290`):
     * true once the unique index on `field` is service-visible. Each probe
-    * of a pending index decrements its countdown — the fake's stand-in for
-    * wall-clock async creation.
+    * of an invisible index counts its `pollsLeft` down — the fake's
+    * stand-in for wall-clock async creation.
     */
   def fieldHasUniqueIndex(itemId: String, field: String): Boolean =
     computeItem(itemId) { t =>
       val fl = field.toLowerCase
-      if (t.uniqueIndexes.contains(fl)) (t, true)
-      else if (!t.indexes.exists(ix => ix.isUnique && ix.field == fl)) (t, false)
-      else {
-        val left = pendingPolls.getOrDefault((itemId, fl), 0) - 1
-        if (left <= 0) {
-          pendingPolls.remove((itemId, fl))
-          (t.copy(uniqueIndexes = t.uniqueIndexes + fl), true)
-        } else {
-          pendingPolls.put((itemId, fl), left)
-          (t, false)
-        }
+      t.indexes.indexWhere(ix => ix.isUnique && ix.field == fl) match {
+        case -1 => (t, false)
+        case i =>
+          val ix = t.indexes(i)
+          if (ix.visible) (t, true)
+          else {
+            val probed = ix.copy(pollsLeft = ix.pollsLeft - 1)
+            (t.copy(indexes = t.indexes.updated(i, probed)), probed.visible)
+          }
       }
     }
 
@@ -343,38 +346,17 @@ object HostedStore extends HostedTableSink {
 
   def rowCount(itemId: String): Long = get(itemId).rows.size.toLong
 
-  /** Tiny LRU of filtered row sets, keyed by (itemId, rows version,
-    * normalized filter fingerprint). Offset pagination naively
-    * re-filters the whole table per page — O(pages × table) =
-    * O(table² / pageSize), quadratic in the table (measured: the sf1
-    * pushdown scan trended past linear as page count grew). A real
-    * service executes the query once and cursors through it; the cache
-    * gives the double the same cost shape.
-    *
-    * Lifecycle: [[computeItem]] bumps the version and EAGERLY removes
-    * the item's entries whenever a mutation replaces the rows vector,
-    * so a superseded multi-large-table version is collectable the
-    * moment it rotates (never parked in an LRU slot); drop/reset clear
-    * wholesale. Keying on itemId (not rows identity) also means two
-    * distinct tables can never alias an entry — previously the shared
-    * `Vector.empty` singleton made all empty tables hit each other's
-    * slots, masking per-schema FilterEval errors.
-    *
-    * The fingerprint compares STRUCTURALLY (a stringified form would
-    * erase value types and let crafted string values collide across
-    * delimiter boundaries), with one normalization: Array-valued filter
-    * payloads (`In` value lists, binary-column comparisons) are
-    * rewritten to Seq — arrays compare by REFERENCE, so semantically
-    * identical filter sets from different plan instances would never
-    * hit and the scan would silently fall back to the O(pages × table)
-    * re-filter the cache exists to kill.
-    *
-    * Values share Row references with the table, so a cached entry
-    * costs one pointer array, not a copy. Empty tables skip the cache
-    * (the pass is O(0); no point spending a slot).
+  /** The fingerprint a [[ScanMemo]] keys on. It compares STRUCTURALLY
+    * (a stringified form would erase value types and let crafted string
+    * values collide across delimiter boundaries), with one
+    * normalization: Array-valued filter payloads (`In` value lists,
+    * binary-column comparisons) are rewritten to Seq — arrays compare by
+    * REFERENCE, so semantically identical filter sets from different plan
+    * instances would never hit and the scan would silently fall back to
+    * the O(pages × table) re-filter the memo exists to kill.
     */
-  private final case class FilterCacheKey(itemId: String, version: Long,
-                                          fk: Seq[Any])
+  private[graft] def fingerprint(filters: Array[Filter]): Seq[Any] =
+    filters.toSeq.map(normFilter)
   private def normVal(v: Any): Any = v match {
     case a: Array[_] => a.toSeq.map(normVal)
     case x           => x
@@ -394,50 +376,17 @@ object HostedStore extends HostedTableSink {
                                            // StringStartsWith, …) compare
                                            // structurally as-is
   }
-  private val filteredCache =
-    new java.util.LinkedHashMap[FilterCacheKey, Vector[Row]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[FilterCacheKey, Vector[Row]]): Boolean =
-        size() > 8
-    }
-  private def invalidateFilterCache(itemId: String, liveVersion: Long): Unit =
-    filteredCache.synchronized {
-      filteredCache.keySet.removeIf(k =>
-        k.itemId == itemId && k.version < liveVersion)
-    }
-  /** Test hook: the (itemId, version) of every live cache entry — lets
-    * specs pin the lifecycle (rotation invalidates, equal-fingerprint
-    * scans share a slot, empty tables take none) without widening the
-    * cache's API.
+  /** The rows of `t` that pass `filters`, through `t`'s own memo. The
+    * O(table) pass runs outside the memo's lock: concurrent misses on
+    * one key just compute twice, and both values are identical.
     */
-  private[graft] def filterCacheEntries: Seq[(String, Long)] =
-    filteredCache.synchronized {
-      filteredCache.keySet.asScala.toSeq.map(k => (k.itemId, k.version))
-    }
   private def filteredRows(t: TableState, filters: Array[Filter]): Vector[Row] =
     if (filters.isEmpty || t.rows.isEmpty) t.rows
     else {
-      val key = FilterCacheKey(t.itemId, t.version,
-        filters.toSeq.map(normFilter))
-      // the O(table) filter pass runs OUTSIDE the lock: holding the
-      // global cache mutex through it would serialize cold scans of
-      // UNRELATED tables (concurrent same-key misses just compute twice
-      // and the second put wins — both values are identical)
-      val hit = filteredCache.synchronized(filteredCache.get(key))
-      if (hit != null) hit
-      else {
+      val key = fingerprint(filters)
+      t.scans.get(key).getOrElse {
         val v = t.rows.filter(FilterEval.compile(filters.toSeq, t.schema))
-        filteredCache.synchronized {
-          // version-at-put check: a writer may have rotated the table
-          // while this pass ran outside the lock — inserting the stale
-          // result would re-pin the superseded rows vector in an LRU
-          // slot (it could never serve a hit; keys carry the version).
-          // computeItem invalidates after publishing, so a stale entry
-          // either fails this check or is removed by that invalidation.
-          val cur = tables.get(t.itemId)
-          if (cur != null && cur.version == key.version)
-            filteredCache.put(key, v)
-        }
+        t.scans.put(key, v)
         v
       }
     }
@@ -446,7 +395,7 @@ object HostedStore extends HostedTableSink {
     * remote analog of `where=...&outFields=...&resultOffset=o&
     * resultRecordCount=n`. Offsets index the *filtered* row set, matching
     * REST pagination semantics. The filter pass is computed once per
-    * (table version, filter set) and shared by all pages — see
+    * (table state, filter set) and shared by all pages — see
     * [[filteredRows]].
     */
   def queryPage(
@@ -467,7 +416,7 @@ object HostedStore extends HostedTableSink {
     * [[filteredRows]] so the count that PLANS the pages and the pages
     * themselves share one filter pass over the table. DELIBERATE
     * allocation: the count materializes the filtered Vector (one pointer
-    * array) and takes a cache slot even for a count-only caller — in the
+    * array) and takes a memo slot even for a count-only caller — in the
     * DSv2 read path a count always precedes paging, so the materialized
     * pass is the one the pages reuse; a streamed O(1)-memory count would
     * just force the filter pass to run twice.
@@ -486,8 +435,7 @@ object HostedStore extends HostedTableSink {
                         specs: Seq[(String, Option[String])]): Seq[Row] = {
     val t = get(itemId)
     val gIdx = groupFields.map(t.schema.fieldIndex)
-    val matching = t.rows.filter(FilterEval.compile(filters.toSeq, t.schema))
-    matching.groupBy(r => gIdx.map(r.get)).toSeq.map { case (keyVals, rows) =>
+    filteredRows(t, filters).groupBy(r => gIdx.map(r.get)).toSeq.map { case (keyVals, rows) =>
       val stats = specs.map {
         case ("count", _) => rows.size.toLong
         case (op @ ("min" | "max"), Some(f)) =>
@@ -511,8 +459,7 @@ object HostedStore extends HostedTableSink {
                   isMin: Boolean): Any = {
     val t = get(itemId)
     val idx = t.schema.fieldIndex(field)
-    val matching = t.rows.iterator
-      .filter(FilterEval.compile(filters.toSeq, t.schema))
+    val matching = filteredRows(t, filters).iterator
       .map(_.get(idx))
       .filter(_ != null)
     if (!matching.hasNext) null
@@ -558,7 +505,7 @@ object HostedStore extends HostedTableSink {
       case WriteMode.Upsert | WriteMode.Update | WriteMode.Insert =>
         val k = key.getOrElse(
           throw new IllegalArgumentException(s"mode ${mode.name} requires a key"))
-        require(t.uniqueIndexes.contains(k.toLowerCase),
+        require(t.hasVisibleUniqueIndex(k.toLowerCase),
           s"mode ${mode.name} requires a unique index on '$k' (src/agol_pandas.py:410)")
         val ki = t.schema.fieldIndex(k)
         // Collapse within-batch duplicate keys in arrival order, the way a

@@ -74,33 +74,36 @@ object LateData {
     // in StreamTuning). The report is identical at any shard count (the
     // drop counter counts post-shuffle partials per window — map-side,
     // invariant to the shard count).
-    val q = StreamTuning.withDerivedPartitions(spark, stageDir, "*") {
-      val raw = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stageDir)
-      val events = graft.core.TimestampNorm.normalizeEventTime(raw)
-      val name = s"latedata_${System.nanoTime()}"
-      val started = events
-        .withWatermark("ts", "0 seconds")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(unix_millis(col("window.start")).as("window_start_ms"),
-          col("n_events"))
-        .writeStream.format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).outputMode("append").start()
-      started.awaitTermination()
-      started
-    }
-    val name = q.name
-    val progress = q.recentProgress.filter(_.numInputRows > 0)
-    val dropped = progress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    val emitted = spark.table(name)
-    val nWindows = emitted.count()
-    val nCounted = emitted.agg(sum(col("n_events"))).head().getLong(0)
-    import spark.implicits._
-    Seq((progress.length.toLong, dropped, nWindows, nCounted))
-      .toDF("n_batches", "late_partials_dropped", "n_windows",
-        "n_rows_counted")
+    val name = s"latedata_${System.nanoTime()}"
+    // the memory sink's view is dropped once the counts are read: the
+    // returned report is a local one-row frame that does not need it
+    try {
+      val q = StreamTuning.withDerivedPartitions(spark, stageDir, "*") {
+        val raw = spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(stageDir)
+        val events = graft.core.TimestampNorm.normalizeEventTime(raw)
+        val started = events
+          .withWatermark("ts", "0 seconds")
+          .groupBy(window(col("ts"), "1 hour"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(unix_millis(col("window.start")).as("window_start_ms"),
+            col("n_events"))
+          .writeStream.format("memory").queryName(name)
+          .trigger(Trigger.AvailableNow()).outputMode("append").start()
+        started.awaitTermination()
+        started
+      }
+      val progress = q.recentProgress.filter(_.numInputRows > 0)
+      val dropped = progress
+        .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
+      val emitted = spark.table(name)
+      val nWindows = emitted.count()
+      val nCounted = emitted.agg(sum(col("n_events"))).head().getLong(0)
+      import spark.implicits._
+      Seq((progress.length.toLong, dropped, nWindows, nCounted))
+        .toDF("n_batches", "late_partials_dropped", "n_windows",
+          "n_rows_counted")
+    } finally spark.catalog.dropTempView(name)
   }
 }

@@ -140,12 +140,7 @@ object StreamCdc {
     // Stable title keyed by the stage dir: re-runs rebuild the SAME
     // hosted table (dropped first) instead of accumulating one
     // full-snapshot table per invocation in the in-process store.
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(stageDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val title = s"stream cdc $tag"
-    val norm = graft.core.ServiceName.normalize(title).fold(sys.error, identity)
-    graft.sinks.HostedSinks.active.resolveByTitle(norm)
-      .foreach(graft.sinks.HostedSinks.active.drop)
+    val title = StreamTuning.replayTitle("stream cdc", stageDir)
     val id = apply(spark, raw, keyCol, seqCol, opCol, title,
       takedownIndexPath)
     HostedTables.read(spark, id).drop(seqCol)

@@ -65,9 +65,11 @@ object StreamRouter {
     val raw = spark.readStream.schema(schema)
       .option("pathGlobFilter", fileGlob).parquet(dir)
     val scored = StreamClassify.score(raw, weights, idCol, textCol)
-    val tag = s"route_${System.nanoTime()}"
+    // titled by the replayed input and dropped first, so re-runs rebuild
+    // the same two tables instead of adding two per call
     val (mainId, quarId) = route(spark, scored, idCol,
-      s"stream main $tag", s"stream quarantine $tag")
+      StreamTuning.replayTitle("stream main", dir, fileGlob),
+      StreamTuning.replayTitle("stream quarantine", dir, fileGlob))
     HostedTables.read(spark, mainId).withColumn("route", lit("main"))
       .unionByName(HostedTables.read(spark, quarId)
         .withColumn("route", lit("quarantine")))

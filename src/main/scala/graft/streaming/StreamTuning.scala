@@ -153,4 +153,19 @@ object StreamTuning {
       spark.table(name).localCheckpoint(true)
     } finally spark.catalog.dropTempView(name)
   }
+
+  /** The normalized hosted title `prefix <digest of key>`, with any table
+    * already under that title dropped. A replay that titles its sink
+    * tables by its input rebuilds the same tables on every run instead of
+    * leaving one more set in the hosted store per call.
+    */
+  private[streaming] def replayTitle(prefix: String, key: String*): String = {
+    val digest = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.mkString("\u0000").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val title = graft.core.ServiceName.normalize(s"$prefix $digest")
+      .fold(sys.error, identity)
+    val sink = graft.sinks.HostedSinks.active
+    sink.resolveByTitle(title).foreach(sink.drop)
+    title
+  }
 }
